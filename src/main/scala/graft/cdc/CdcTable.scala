@@ -1,12 +1,13 @@
 package graft.cdc
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.util.Fs
+import graft.util.Fs.{deleteRecursively, withListing}
 
 /** Thrown when a commit loses the version CAS (or a bucket-dir
   * publish) to another writer; the caller re-reads the current
@@ -21,9 +22,9 @@ class ConcurrentCommitException(msg: String)
 object CdcTable {
   /** Resolved bucket-union relations, memoized per (session, dir list
     * with per-dir mtimes). Bucket dirs are IMMUTABLE once published
-    * ([[CdcTable.publishDir]] is an atomic move that refuses existing
-    * names; manifests CAS), so a dir set's file listing and merged
-    * footer schema can only go stale if the dirs are deleted and
+    * ([[graft.util.Fs.publishDir]] is an atomic move that refuses
+    * existing names; manifests CAS), so a dir set's file listing and
+    * merged footer schema can only go stale if the dirs are deleted and
     * recreated at the same names — which the mtime fingerprint in the
     * key detects. Values are LAZY plans: every action still reads the
     * parquet bytes fresh from disk; what the memo removes is the
@@ -87,7 +88,6 @@ class CdcTable(
   def location: String = path
 
   private val dir = Paths.get(path)
-  private val latestFile = dir.resolve("_LATEST")
   Files.createDirectories(dir)
 
   private def bucketCol =
@@ -106,8 +106,8 @@ class CdcTable(
     }
 
   /** bucket id → relative dir name, for a manifest version. Memoized
-    * per instance: a committed manifest is immutable (the hard-link
-    * CAS in [[writeManifest]] makes `manifest-<v>.json` write-once),
+    * per instance: a committed manifest is immutable (the version CAS
+    * in [[writeManifest]] makes `manifest-<v>.json` write-once),
     * so the parse can never go stale; callers existence-check before
     * resolving, which keeps vacuum semantics intact. */
   private val manifestCache =
@@ -124,32 +124,15 @@ class CdcTable(
     val body = m.toSeq.sortBy(_._1)
       .map { case (b, p) => s""""$b": "$p"""" }
       .mkString("{", ", ", "}")
-    val tmp = dir.resolve(s"manifest-$v.json.tmp")
-    Files.write(tmp, body.getBytes)
-    // optimistic concurrency: publishing the manifest is the commit
-    // point and version numbers are the CAS key. A rename cannot
-    // express the CAS (POSIX rename silently replaces), so the publish
-    // is a hard link — atomically exclusive — and a lost race surfaces
-    // as a conflict instead of a silent overwrite (the loser's bucket
-    // dirs are unreferenced garbage for vacuum). Durability scope:
-    // atomic against PROCESS failure; an OS crash/power loss can
-    // persist the link before the staged bytes (no fsync here) — on
-    // a filesystem without ordered metadata, recovery is re-emitting
-    // the batch, which the merge contract makes idempotent
-    try {
-      Files.createLink(dir.resolve(s"manifest-$v.json"), tmp)
-      Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new ConcurrentCommitException(
-          s"version $v was committed by another writer; " +
-            "re-read the current version and retry the batch")
-    }
-    val lt = dir.resolve(s"_LATEST.tmp$v")
-    Files.write(lt, v.toString.getBytes)
-    Files.move(lt, latestFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    // optimistic concurrency: a lost race surfaces as a conflict
+    // instead of a silent overwrite (the loser's bucket dirs are
+    // unreferenced garbage for vacuum). After an OS crash the link can
+    // outlive its bytes (no fsync); recovery is re-emitting the batch,
+    // which the merge contract makes idempotent
+    if (!ManifestTail.commit(dir, v, v => s"manifest-$v.json", body))
+      throw new ConcurrentCommitException(
+        s"version $v was committed by another writer; " +
+          "re-read the current version and retry the batch")
   }
 
   private def readBuckets(dirs: Seq[String]): Option[DataFrame] =
@@ -166,12 +149,8 @@ class CdcTable(
 
   private val schemaFile = dir.resolve("_schema.json")
 
-  private def writeSchemaFile(st: StructType): Unit = {
-    val tmp = dir.resolve("_schema.json.tmp")
-    Files.write(tmp, st.json.getBytes)
-    Files.move(tmp, schemaFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeSchemaFile(st: StructType): Unit =
+    Fs.writeAtomic(schemaFile, st.json.getBytes)
 
   /** The committed payload schema. Served from `_schema.json` (written
     * on every CREATE/ALTER commit) so per-batch drift detection costs
@@ -228,12 +207,7 @@ class CdcTable(
     val next = cur.getOrElse(-1L) + 1
     publishAndCommit(next, curManifest, staged)
     if (cur.isEmpty) {
-      Files.write(dir.resolve("_ddl.jsonl"),
-        (s"""{"version": $next, "event": "CREATE_TABLE", """ +
-          s""""pk": ${pkCols.map(c => s"\"$c\"").mkString("[", ",", "]")}, """ +
-          s""""schema": ${incomingPayload.json}}""" + "\n").getBytes,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      Fs.appendLines(ddlFile, Seq(createTableDdl(next, incomingPayload)))
       writeSchemaFile(incomingPayload)
     }
     next
@@ -264,9 +238,7 @@ class CdcTable(
     // (ddl line to append, schema to record in _schema.json)
     val ddlEvent: Option[(String, StructType)] = cur match {
       case None =>
-        Some((s"""{"version": $next, "event": "CREATE_TABLE", """ +
-          s""""pk": ${pkCols.map(c => s"\"$c\"").mkString("[", ",", "]")}, """ +
-          s""""schema": ${incomingPayload.json}}""", incomingPayload))
+        Some((createTableDdl(next, incomingPayload), incomingPayload))
       case Some(_) =>
         val curPayload = payloadSchema.get
         // legacy tables (created before _schema.json existed) resolve
@@ -308,19 +280,21 @@ class CdcTable(
     try publishAndCommit(next, curManifest, staged)
     finally deleteRecursively(stagingPath)
     ddlEvent.foreach { case (line, recordedSchema) =>
-      Files.write(dir.resolve("_ddl.jsonl"), (line + "\n").getBytes,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      Fs.appendLines(ddlFile, Seq(line))
       writeSchemaFile(recordedSchema)
     }
     next
   }
 
+  private val ddlFile = dir.resolve("_ddl.jsonl")
+
+  private def createTableDdl(v: Long, payload: StructType): String =
+    s"""{"version": $v, "event": "CREATE_TABLE", """ +
+      s""""pk": ${pkCols.map(c => s"\"$c\"").mkString("[", ",", "]")}, """ +
+      s""""schema": ${payload.json}}"""
+
   /** The table's DDL history (CREATE_TABLE / ALTER_TABLE lines). */
-  def ddlEvents: Seq[String] =
-    if (!Files.exists(dir.resolve("_ddl.jsonl"))) Nil
-    else new String(Files.readAllBytes(dir.resolve("_ddl.jsonl")))
-      .split("\n").toSeq.filter(_.nonEmpty)
+  def ddlEvents: Seq[String] = Fs.readLines(ddlFile)
 
   /** A fresh, collision-proof staging directory under the table root.
     * Every writer stages under its own nonce: racing writers can share
@@ -328,37 +302,6 @@ class CdcTable(
     * silently clobbered by a SaveMode.Overwrite from the other side. */
   private def newStagingDir(tag: String): Path =
     dir.resolve(s"_staging-$tag-${java.util.UUID.randomUUID().toString.take(8)}")
-
-  /** Publish one staged bucket dir under its final deterministic name.
-    * ATOMIC_MOVE **without** REPLACE_EXISTING: if another writer
-    * already published that (bucket, version) dir, the move fails and
-    * we surface a retryable conflict — the committed data is never
-    * deleted or replaced out from under a manifest CAS. */
-  private def publishDir(staged: Path, destName: String): Unit = {
-    val dest = dir.resolve(destName)
-    // Defense-in-depth: Linux maps ATOMIC_MOVE to rename(2), which
-    // silently REPLACES an existing *empty* destination directory —
-    // only a non-empty dest fails with ENOTEMPTY. An explicit exists
-    // check surfaces even an empty published dir as a conflict
-    // (published parquet dirs are never empty in practice, but the
-    // invariant "a published name is never clobbered" shouldn't rely
-    // on that).
-    if (Files.exists(dest))
-      throw new ConcurrentCommitException(
-        s"bucket dir $destName already exists; re-read and retry")
-    try Files.move(staged, dest, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      // Linux rename(2) onto an existing dir surfaces as EEXIST or
-      // ENOTEMPTY — FileAlreadyExistsException or a generic
-      // FileSystemException. Classify by the destination: if it
-      // exists, another writer published it (retryable conflict);
-      // anything else is a genuine IO failure and propagates.
-      case e: java.nio.file.FileSystemException if Files.exists(dest) =>
-        throw new ConcurrentCommitException(
-          s"bucket dir $destName was published by another writer " +
-            s"(${e.getClass.getSimpleName}); re-read and retry")
-    }
-  }
 
   /** Publish every staged bucket dir under its `b<b>-v<next>` name,
     * then commit the manifest — cleaning up THIS writer's published
@@ -369,15 +312,21 @@ class CdcTable(
     * manifest CAS, leaving them would block version `next` for every
     * later writer (see sweepStaging, which mops the crashed-writer
     * variant of the same hazard). Deleting only `published` — never
-    * `dest` dirs someone ELSE won — is safe because publishDir's
-    * move-without-replace guarantees a name we published is ours. */
+    * `dest` dirs someone ELSE won — is safe because `Fs.publishDir`
+    * never replaces, so a name we published is ours: if another
+    * writer already published a (bucket, version) dir, the commit
+    * fails as a retryable conflict and the committed data is never
+    * deleted or replaced out from under a manifest CAS. */
   private def publishAndCommit(next: Long, base: Map[Int, String],
       staged: Seq[(Int, Path)]): Map[Int, String] = {
     val published = Seq.newBuilder[Path]
     try {
       val newDirs = staged.map { case (b, p) =>
         val dest = s"b$b-v$next"
-        publishDir(p, dest)
+        if (!Fs.publishDir(p, dir.resolve(dest)))
+          throw new ConcurrentCommitException(
+            s"bucket dir $dest was published by another writer; " +
+              "re-read and retry")
         published += dir.resolve(dest)
         b -> dest
       }.toMap
@@ -388,20 +337,6 @@ class CdcTable(
         published.result().foreach(deleteRecursively)
         throw e
     }
-  }
-
-  /** Directory listing with the stream closed (Files.list leaks an
-    * open directory fd otherwise — fatal over months of maintenance
-    * cycles in a long-lived driver). */
-  private def withListing[T](p: Path)(f: Iterator[Path] => T): T = {
-    val s = Files.list(p)
-    try f(s.iterator().asScala) finally s.close()
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      withListing(p)(_.toSeq).foreach(deleteRecursively)
-    Files.deleteIfExists(p)
   }
 
   /** Current live rows (soft-deleted hidden, bookkeeping dropped). */
@@ -641,15 +576,14 @@ class CdcTable(
       // is an atomic dir move preserving part-file names, so the
       // relative "b<b>-v<next>/part-*" keys match the published
       // layout); all-null files get no stats line and simply stay
-      // unpruned. The lines wait in the STAGING dir and move into
-      // place only after the manifest CAS succeeds: a lost race or a
-      // crash before commit deletes them with the staging sweep —
-      // zero orphan stats lines can ever exist for an uncommitted
-      // version (DataSkippingSpec injects the race). A crash in
-      // the window AFTER the commit merely loses the stats: the new
-      // files scan unpruned until the next clustering pass (the
-      // OPTIMIZE freshness model — pruning is an optimization, never
-      // a correctness gate).
+      // unpruned. The lines are written only after the manifest CAS
+      // succeeds: a lost race or a crash before commit leaves no
+      // stats file — zero orphan stats lines can ever exist for an
+      // uncommitted version (DataSkippingSpec injects the race). A
+      // crash in the window AFTER the commit merely loses the stats:
+      // the new files scan unpruned until the next clustering pass
+      // (the OPTIMIZE freshness model — pruning is an optimization,
+      // never a correctness gate).
       val statRows = spark.read
         .parquet(staged.map(_._2.toString): _*)
         .groupBy(input_file_name().as("f"))
@@ -669,15 +603,9 @@ class CdcTable(
           }
         }
       }
-      val statsTmp = stagingPath.resolve(s"_filestats-$next.jsonl")
-      if (statLines.nonEmpty)
-        Files.write(statsTmp, statLines.mkString("", "\n", "\n").getBytes)
-      try {
-        publishAndCommit(next, m, staged)
-        if (statLines.nonEmpty)
-          Files.move(statsTmp, dir.resolve(s"_filestats-$next.jsonl"),
-            StandardCopyOption.ATOMIC_MOVE)
-      } finally deleteRecursively(stagingPath)
+      try publishAndCommit(next, m, staged)
+      finally deleteRecursively(stagingPath)
+      writeLines(dir.resolve(s"_filestats-$next.jsonl"), statLines.toSeq)
       next
     }
 
@@ -781,32 +709,23 @@ class CdcTable(
       // clone-as-of-version semantics Delta/Iceberg define. The DDL
       // log is truncated at `v` and the last kept entry's embedded
       // schema becomes the clone's _schema.json.
-      val ddlSrc = dir.resolve("_ddl.jsonl")
-      val keptDdl =
-        if (!Files.exists(ddlSrc)) Nil
-        else {
-          val verRe = "\"version\":\\s*(\\d+)".r
-          new String(Files.readAllBytes(ddlSrc)).split("\n").toSeq
-            .filter(_.nonEmpty)
-            .filter(l => verRe.findFirstMatchIn(l)
-              .exists(_.group(1).toLong <= v))
-        }
+      val verRe = "\"version\":\\s*(\\d+)".r
+      val keptDdl = ddlEvents.filter(l => verRe.findFirstMatchIn(l)
+        .exists(_.group(1).toLong <= v))
       if (keptDdl.nonEmpty) {
-        Files.write(clone.dir.resolve("_ddl.jsonl"),
-          keptDdl.mkString("", "\n", "\n").getBytes)
+        writeLines(clone.ddlFile, keptDdl)
         // "schema" is the LAST field of every DDL line we write:
         // {..., "schema": {...}} — extract it up to the outer brace
         val last = keptDdl.last
         val i = last.indexOf("\"schema\": ")
         if (i >= 0)
-          Files.write(clone.dir.resolve("_schema.json"),
+          Fs.writeAtomic(clone.schemaFile,
             last.substring(i + "\"schema\": ".length, last.length - 1)
               .getBytes)
       } else if (Files.exists(schemaFile))
         // legacy table predating the DDL log: head schema is the only
         // record there is
-        Files.copy(schemaFile, clone.dir.resolve("_schema.json"),
-          StandardCopyOption.REPLACE_EXISTING)
+        Fs.writeAtomic(clone.schemaFile, Files.readAllBytes(schemaFile))
       locally {
         val dirs = m.values.toSet
         val kept = statsText.split("\n")
@@ -822,19 +741,22 @@ class CdcTable(
         // versioned name, written after the clone's v0 manifest above —
         // the same stats-follow-manifest ordering clusterZOrder commits
         // under
-        if (kept.nonEmpty)
-          Files.write(clone.dir.resolve("_filestats-0.jsonl"),
-            kept.mkString("", "\n", "\n").getBytes)
+        writeLines(clone.dir.resolve("_filestats-0.jsonl"), kept.toSeq)
       }
-      Files.write(clonesFile,
-        (s"""{"dest": "${Paths.get(destPath).toAbsolutePath.normalize}", """ +
-          s""""version": $v}""" + "\n").getBytes,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+      Fs.appendLines(clonesFile, Seq(cloneRef(
+        Paths.get(destPath).toAbsolutePath.normalize.toString, v)))
       Some(clone)
     }
 
+  /** Replace `p` atomically with `lines`; no file when there are none. */
+  private def writeLines(p: Path, lines: Seq[String]): Unit =
+    if (lines.nonEmpty)
+      Fs.writeAtomic(p, lines.mkString("", "\n", "\n").getBytes)
+
   private val clonesFile = dir.resolve("_clones.jsonl")
+
+  private def cloneRef(dest: String, v: Long) =
+    s"""{"dest": "$dest", "version": $v}"""
 
   /** Registered clone back-references: (dest path, pinned version). */
   def cloneRefs: Seq[(String, Long)] =
@@ -848,12 +770,11 @@ class CdcTable(
   def forgetClone(destPath: String): Boolean = {
     val abs = Paths.get(destPath).toAbsolutePath.normalize.toString
     val (dropped, kept) = cloneRefs.partition(_._1 == abs)
-    if (dropped.nonEmpty) {
-      val body = kept.map { case (d, v) =>
-        s"""{"dest": "$d", "version": $v}"""
-      }.mkString("", "\n", if (kept.nonEmpty) "\n" else "")
-      Files.write(clonesFile, body.getBytes)
-    }
+    // atomic replace: a torn rewrite would drop every clone pin, and
+    // the next vacuum would delete dirs live clones still read
+    if (dropped.nonEmpty)
+      Fs.writeAtomic(clonesFile,
+        kept.map { case (d, v) => cloneRef(d, v) + "\n" }.mkString.getBytes)
     dropped.nonEmpty
   }
 
@@ -945,7 +866,7 @@ class CdcTable(
       .filter { p =>
         val n = p.getFileName.toString
         (n.startsWith("_staging-") || uncommittedBucketDir(n)) &&
-          graft.util.Fs.newestMtime(p) < cutoff
+          Fs.newestMtime(p) < cutoff
       }
       .map { p => deleteRecursively(p); p.getFileName.toString }
       .sorted

@@ -1,6 +1,6 @@
 package graft.cdc
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -79,7 +79,6 @@ class ConsolidatedStore(
   def location: String = path
 
   private val dir = Paths.get(path)
-  private val latestFile = dir.resolve("_LATEST")
   Files.createDirectories(dir)
 
   private def commitName(v: Long) = s"commit-$v"
@@ -181,28 +180,31 @@ class ConsolidatedStore(
       c.payload.json}}"""
     val body = (header +: c.entries.toSeq.sortBy(e => (e._1._1, e._1._2))
       .map { case ((t, b), seg) => s"$t/$b=$seg" }).mkString("\n")
-    val tmp = dir.resolve(s"${commitName(c.version)}.tmp-${nonce()}")
-    Files.write(tmp, body.getBytes)
-    // hard-link CAS, same discipline as CdcTable.writeManifest: the
-    // link is atomically exclusive, a lost race is a retryable
-    // conflict, never a silent overwrite. Durability scope: atomic
-    // against PROCESS failure; OS crash/power loss can persist the
-    // link before the staged bytes (no fsync) — recovery is
-    // re-emitting the batch, idempotent under the merge contract
-    try {
-      Files.createLink(dir.resolve(commitName(c.version)), tmp)
-      Files.deleteIfExists(tmp)
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new ConcurrentCommitException(
-          s"fleet version ${c.version} was committed by another writer; " +
-            "re-read and retry the batch")
+    // same version CAS as CdcTable.writeManifest: a lost race is a
+    // retryable conflict, never a silent overwrite; after an OS crash
+    // recovery is re-emitting the batch, idempotent under the merge
+    // contract
+    if (!ManifestTail.commit(dir, c.version, commitName, body))
+      throw new ConcurrentCommitException(
+        s"fleet version ${c.version} was committed by another writer; " +
+          "re-read and retry the batch")
+  }
+
+  /** Publish the staged segment under its nonce'd final name, then
+    * run `commit` (the CAS). Any failure after the publish deletes the
+    * segment: no commit references it. */
+  private def publishSegment(staging: Path, segName: String)
+      (commit: => Unit): Unit = {
+    try
+      if (!Fs.publishDir(staging, dir.resolve(segName)))
+        throw new ConcurrentCommitException(s"segment $segName is taken")
+    finally Fs.deleteRecursively(staging)
+    try commit
+    catch {
+      case e: Throwable =>
+        Fs.deleteRecursively(dir.resolve(segName))
+        throw e
     }
-    val lt = dir.resolve(s"_LATEST.tmp${c.version}")
-    Files.write(lt, c.version.toString.getBytes)
-    Files.move(lt, latestFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   private def nonce() = java.util.UUID.randomUUID().toString.take(8)
@@ -330,11 +332,8 @@ class ConsolidatedStore(
     val segName = s"seg-v$next-${nonce()}"
     val staging = dir.resolve(s"_staging-$segName")
     merged.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    try {
-      // publish under the nonce'd name (no collision possible), then
-      // the commit CAS is the fleet's single atomic visibility point
-      Files.move(staging, dir.resolve(segName),
-        StandardCopyOption.ATOMIC_MOVE)
+    // the commit CAS is the fleet's single atomic visibility point
+    publishSegment(staging, segName) {
       beforeCommitHook()
       val touchedEntries = touched.map { case (t, b) =>
         (t, b) -> segName
@@ -349,12 +348,6 @@ class ConsolidatedStore(
         else Commit(next, pk, payload, touchedEntries, delta = true))
       resolveCache =
         Some(Commit(next, pk, payload, entries ++ touchedEntries))
-    } catch {
-      case e: Throwable =>
-        // loser/crasher cleanup: our segment is referenced by nothing
-        Fs.deleteRecursively(dir.resolve(segName))
-        Fs.deleteRecursively(staging)
-        throw e
     }
     // DDL history (post-commit, like CdcTable): CREATE_TABLE for
     // first-seen tables, one ALTER_TABLE on widen
@@ -366,11 +359,7 @@ class ConsolidatedStore(
       Seq(s"""{"version": $next, "event": "ALTER_TABLE", """ +
         s""""schema": ${payload.json}}""")
     else Nil)
-    if (ddl.nonEmpty)
-      Files.write(dir.resolve("_ddl.jsonl"),
-        ddl.mkString("", "\n", "\n").getBytes,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
+    if (ddl.nonEmpty) Fs.appendLines(dir.resolve("_ddl.jsonl"), ddl)
     next
   }
 
@@ -383,10 +372,7 @@ class ConsolidatedStore(
   def tablesAt(v: Long): Seq[String] =
     resolved(v).map(_.tables).getOrElse(Nil)
 
-  def ddlEvents: Seq[String] =
-    if (!Files.exists(dir.resolve("_ddl.jsonl"))) Nil
-    else new String(Files.readAllBytes(dir.resolve("_ddl.jsonl")))
-      .split("\n").toSeq.filter(_.nonEmpty)
+  def ddlEvents: Seq[String] = Fs.readLines(dir.resolve("_ddl.jsonl"))
 
   /** Current full state of one table (all buckets, soft-deletes
     * visible — [[Apply.liveView]] for the live rows). Reads only the
@@ -587,20 +573,13 @@ class ConsolidatedStore(
     val segName = s"seg-v$next-${nonce()}"
     val staging = dir.resolve(s"_staging-$segName")
     all.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    try {
-      Files.move(staging, dir.resolve(segName),
-        StandardCopyOption.ATOMIC_MOVE)
+    publishSegment(staging, segName) {
       // compaction is always a checkpoint: one FULL manifest, every
       // pointer on the fresh segment — the resolution chain restarts
       val full = Commit(next, c.pk, c.payload,
         c.entries.map { case (k, _) => k -> segName })
       writeCommit(full)
       resolveCache = Some(full)
-    } catch {
-      case e: Throwable =>
-        Fs.deleteRecursively(dir.resolve(segName))
-        Fs.deleteRecursively(staging)
-        throw e
     }
     next
   }

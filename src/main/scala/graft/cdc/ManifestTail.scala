@@ -3,9 +3,14 @@ package graft.cdc
 import java.nio.file.{Files, Path}
 import java.util.concurrent.atomic.AtomicLong
 
-/** Commit-log discovery for a [[CdcTable]] WITHOUT directory listing:
-  * manifest versions are dense (`manifest-0.json`, `manifest-1.json`,
-  * … — [[CdcTable.currentVersion]] delegates here for exactly that
+import graft.util.Fs
+
+/** The version log of a [[CdcTable]] or [[ConsolidatedStore]]: its
+  * write half ([[commit]]) and its discovery half ([[latest]]).
+  *
+  * Discovery works WITHOUT directory listing: manifest versions are
+  * dense (`manifest-0.json`, `manifest-1.json`, … —
+  * [[CdcTable.currentVersion]] delegates here for exactly that
   * reason), so the newest committed version is found by reading the
   * `_LATEST` pointer and probing forward over its (bounded) crash
   * lag. Cost per call: one small-file read plus O(pointer lag)
@@ -48,4 +53,17 @@ private[graft] object ManifestTail {
              Files.exists(dir.resolve(fileFor(v + 1))) }) v += 1
     v
   }
+
+  /** Commit version `v`: create `fileFor(v)` holding `body` iff no
+    * writer has committed `v` yet, then advance the `_LATEST` pointer.
+    * Returns false when the version was taken — the caller's conflict.
+    * Publishing the version file is the commit point (version numbers
+    * are the CAS key); a writer that dies before the pointer update is
+    * covered by [[latest]]'s roll-forward. */
+  def commit(dir: Path, v: Long, fileFor: Long => String,
+      body: String): Boolean =
+    Fs.createExclusive(dir.resolve(fileFor(v)), body.getBytes) && {
+      Fs.writeAtomic(dir.resolve("_LATEST"), v.toString.getBytes)
+      true
+    }
 }

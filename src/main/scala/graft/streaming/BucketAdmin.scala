@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
-
+import graft.util.Fs
 
 /** Source-bucket provisioning — the engine analog of the reference's
   * `createBucketIfNotExisting` / `deleteBucket`
@@ -92,20 +91,9 @@ class LocalDirBucketAdmin(root: String) extends BucketAdmin {
       s"""{"location": "$location", "ttlDays": $ttlDays, """ +
         s""""rule": "delete-${ttlDays}d-since-custom-time"}"""
     Files.write(tmp.resolve("_policy.json"), body.getBytes)
-    try {
-      Files.move(tmp, dir(name),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      true
-    } catch {
-      // another worker created it between our existence check and the
-      // promote (rename onto a non-empty dir fails) — success for the
-      // pipeline, false for this caller
-      case _: java.nio.file.FileSystemException
-          if Files.exists(dir(name)) =>
-        Files.deleteIfExists(tmp.resolve("_policy.json"))
-        Files.deleteIfExists(tmp)
-        false
-    }
+    // false: another worker created it first — success for the
+    // pipeline, false for this caller
+    Fs.publishDir(tmp, dir(name)) || { Fs.deleteRecursively(tmp); false }
   }
 
   override def exists(name: String): Boolean = Files.isDirectory(dir(name))
@@ -123,16 +111,5 @@ class LocalDirBucketAdmin(root: String) extends BucketAdmin {
     }
   }
 
-  override def delete(name: String): Unit = {
-    val d = dir(name)
-    if (!Files.exists(d)) return
-    def rm(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val s = Files.list(p)
-        try s.iterator().asScala.toSeq.foreach(rm) finally s.close()
-      }
-      Files.deleteIfExists(p); ()
-    }
-    rm(d)
-  }
+  override def delete(name: String): Unit = Fs.deleteRecursively(dir(name))
 }

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,6 +9,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.cdc.{CdcTable, Decode, TableAllowlist}
 import graft.sources.DatastreamAvro
+import graft.util.Fs
 
 /** Multiplexed multi-table CDC: ONE stream carries every table's
   * change files; each micro-batch routes events to per-table merge
@@ -106,14 +105,11 @@ class CdcRouter(
   private def discoverStores(): Unit = {
     val root = Paths.get(rootPath)
     if (Files.exists(root)) {
-      val ls = Files.list(root)
-      val committed =
-        try ls.iterator().asScala.toSeq
-          .map(_.getFileName.toString).sorted
-          .filter(n => (n == "_store" || n.startsWith("_store-")) &&
-            Files.isDirectory(root.resolve(n)))
-          .flatMap(n => openStore(n).pkSignature.map(_ -> n))
-        finally ls.close()
+      val committed = Fs.withListing(root)(_.toSeq)
+        .map(_.getFileName.toString).sorted
+        .filter(n => (n == "_store" || n.startsWith("_store-")) &&
+          Files.isDirectory(root.resolve(n)))
+        .flatMap(n => openStore(n).pkSignature.map(_ -> n))
       // one committed dir per signature, EVER — validated over the
       // whole listing before any claim, so Files.list enumeration
       // order can never pick a write target among duplicates. Two
@@ -238,18 +234,13 @@ class CdcRouter(
   }
 
   /** Database-level DDL history (CREATE_DATABASE). */
-  def databaseDdlEvents: Seq[String] =
-    if (!Files.exists(rootDdl)) Nil
-    else new String(Files.readAllBytes(rootDdl))
-      .split("\n").toSeq.filter(_.nonEmpty)
+  def databaseDdlEvents: Seq[String] = Fs.readLines(rootDdl)
 
   private def emitCreateDatabaseOnce(): Unit =
     if (!Files.exists(rootDdl)) {
       Files.createDirectories(rootDdl.getParent)
-      Files.write(rootDdl,
-        (s"""{"event": "CREATE_DATABASE", "database": "$databaseName"}""" +
-          "\n").getBytes,
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      Fs.appendLines(rootDdl,
+        Seq(s"""{"event": "CREATE_DATABASE", "database": "$databaseName"}"""))
     }
 
   /** Apply one (possibly multi-table) batch of decoded change events.
@@ -454,15 +445,12 @@ class CdcRouter(
     val incomingPayload =
       events.schema("row").dataType.asInstanceOf[StructType]
     // one job: which (table, bucket) does the batch touch?
-    val tT0 = System.nanoTime()
     val bCol = pmod(xxhash64(pk.map(c => col(s"row.$c")): _*),
       lit(numBuckets)).cast("int")
     val touched = events
       .select(col("table_name"), bCol.as("_bucket")).distinct()
       .collect().map(r => (r.getString(0), r.getInt(1)))
       .groupBy(_._1).map { case (n, bs) => n -> bs.map(_._2).toSet }
-    if (sys.env.contains("GRAFT_ROUTER_DEBUG"))
-      System.err.println(f"[router] touched ${(System.nanoTime()-tT0)/1e9}%.2f s")
     // driver-side manifest resolve: every touched bucket dir, across
     // all tables, read as ONE parquet relation (the table rides in
     // the path — rootPath/<table>/b<bucket>-v<version>/part-*).
@@ -504,37 +492,17 @@ class CdcRouter(
     val staging = Paths.get(rootPath).resolve(
       s"_staging-mb$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
     try {
-      val tW0 = System.nanoTime()
       merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .partitionBy("table_name", "_bucket")
         .parquet(staging.toString)
-      if (sys.env.contains("GRAFT_ROUTER_DEBUG"))
-        System.err.println(f"[router] write ${(System.nanoTime()-tW0)/1e9}%.2f s")
-      val tC0 = System.nanoTime()
       // per-table commit: pure FS renames + one manifest CAS each
       names.foreach { n =>
-        val tDir = staging.resolve(s"table_name=$n")
-        val staged = {
-          val s = Files.list(tDir)
-          try s.iterator().asScala.toSeq.filter(
-            _.getFileName.toString.startsWith("_bucket="))
-          finally s.close()
-        }.map(p =>
-          p.getFileName.toString.stripPrefix("_bucket=").toInt -> p)
+        val staged = Fs.withListing(staging.resolve(s"table_name=$n"))(_.toSeq)
+          .filter(_.getFileName.toString.startsWith("_bucket="))
+          .map(p => p.getFileName.toString.stripPrefix("_bucket=").toInt -> p)
         table(n).commitStaged(staged, incomingPayload, basedOn(n)._1)
       }
-      if (sys.env.contains("GRAFT_ROUTER_DEBUG"))
-        System.err.println(f"[router] commit ${(System.nanoTime()-tC0)/1e9}%.2f s")
-    } finally {
-      def rm(p: java.nio.file.Path): Unit = {
-        if (Files.isDirectory(p)) {
-          val s = Files.list(p)
-          try s.iterator().asScala.toSeq.foreach(rm(_)) finally s.close()
-        }
-        Files.deleteIfExists(p); ()
-      }
-      rm(staging)
-    }
+    } finally Fs.deleteRecursively(staging)
   }
 
   /** Reap router-root `_staging-mb*` dirs orphaned by a hard crash
@@ -552,13 +520,10 @@ class CdcRouter(
     val root = Paths.get(rootPath)
     if (!Files.exists(root)) return Nil
     val cutoff = System.currentTimeMillis() - maxAgeMs
-    val listing = Files.list(root)
-    val candidates =
-      try listing.iterator().asScala.toSeq.filter { p =>
-        p.getFileName.toString.startsWith("_staging-mb") &&
-          graft.util.Fs.newestMtime(p) < cutoff
-      } finally listing.close()
-    candidates.map { p => graft.util.Fs.deleteRecursively(p); p.toString }
+    Fs.withListing(root)(_.toSeq).filter { p =>
+      p.getFileName.toString.startsWith("_staging-mb") &&
+        Fs.newestMtime(p) < cutoff
+    }.map { p => Fs.deleteRecursively(p); p.toString }
   }
 
   /** Mid-stream table ADDITION — the reference's stream-update CRUD

@@ -1,12 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.cdc.CdcTable
+import graft.util.Fs
 
 /** Follow a CdcTable's commit log as a Structured Streaming query —
   * the streaming half of the change-data-feed story: downstream
@@ -169,18 +170,15 @@ object CdfFollow {
       else
         try new String(Files.readAllBytes(marker)).trim.toLong
         catch { case _: Exception => -1L }
-    // stage + atomic rename: atomic against PROCESS failure (the
-    // crash window every gate injects), not OS crash/power loss —
-    // the kernel may persist the rename before the bytes. A torn
-    // watermark parses as -1 (delivered() below) and only causes
-    // redelivery, which the consumer contract already absorbs, so
-    // fsync hardening is deliberately not paid here.
+    // atomic against PROCESS failure (the crash window every gate
+    // injects), not OS crash/power loss — the kernel may persist the
+    // rename before the bytes. A torn watermark parses as -1
+    // (delivered() above) and only causes redelivery, which the
+    // consumer contract already absorbs, so fsync hardening is
+    // deliberately not paid here.
     def advance(v: Long): Unit = {
-      val tmp = Paths.get(checkpointDir, s".delivered-watermark.tmp")
-      Files.createDirectories(tmp.getParent)
-      Files.write(tmp, v.toString.getBytes)
-      Files.move(tmp, marker, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      Files.createDirectories(marker.getParent)
+      Fs.writeAtomic(marker, v.toString.getBytes)
     }
     val versions = spark.readStream
       .format("graft.streaming.CdcLogSource")

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
-import scala.jdk.CollectionConverters._
+import graft.util.Fs
 
 /** Processed-file TTL marking + age-gated purge — the literal analog
   * of the reference's `SetTTLTask` (DatastreamEventReader.java:213-281)
@@ -29,24 +29,17 @@ object ProcessedFiles {
     if (paths.isEmpty) return
     val p = Paths.get(log)
     Option(p.getParent).foreach(d => Files.createDirectories(d))
-    val lines = paths.map(f => s"$f\t$nowMs").mkString("", "\n", "\n")
-    Files.writeString(p, lines,
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    ()
+    Fs.appendLines(p, paths.map(f => s"$f\t$nowMs"))
   }
 
   /** path → newest stamp (replays only extend life). */
-  def stamps(log: String): Map[String, Long] = {
-    val p = Paths.get(log)
-    if (!Files.exists(p)) return Map.empty
-    Files.readAllLines(p).asScala.iterator
-      .filter(_.nonEmpty)
+  def stamps(log: String): Map[String, Long] =
+    Fs.readLines(Paths.get(log))
       .map { l =>
         val i = l.lastIndexOf('\t')
         (l.substring(0, i), l.substring(i + 1).toLong)
       }
-      .toSeq.groupMapReduce(_._1)(_._2)(math.max)
-  }
+      .groupMapReduce(_._1)(_._2)(math.max)
 
   /** The 30-day lifecycle rule made explicit: delete source files
     * whose newest processed-stamp is at least `ttlMs` old. Returns

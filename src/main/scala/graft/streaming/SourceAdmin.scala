@@ -1,8 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
-import graft.util.Retry
+import graft.util.{Fs, Retry}
 
 /** Thin control-plane adapter for source-stream lifecycle — the
   * engine-side analog of the reference's Datastream CRUD surface
@@ -91,12 +91,8 @@ class LocalDirSourceAdmin(root: String) extends SourceAdmin {
   private def dir(id: String) = Paths.get(root).resolve(id)
 
   private def write(id: String, file: String, value: String): Unit = {
-    val d = dir(id)
-    Files.createDirectories(d)
-    val tmp = d.resolve(s"$file.tmp")
-    Files.write(tmp, value.getBytes)
-    Files.move(tmp, d.resolve(file), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Files.createDirectories(dir(id))
+    Fs.writeAtomic(dir(id).resolve(file), value.getBytes)
   }
 
   private def read(id: String, file: String): String = {
@@ -133,10 +129,6 @@ class LocalDirSourceAdmin(root: String) extends SourceAdmin {
   override def delete(id: String): Unit = {
     if (!exists(id)) throw new Retry.FatalPipelineException(
       s"stream $id does not exist")
-    val d = dir(id)
-    val listing = Files.list(d)
-    try listing.iterator().forEachRemaining(p => Files.deleteIfExists(p))
-    finally listing.close()
-    Files.deleteIfExists(d)
+    Fs.deleteRecursively(dir(id))
   }
 }

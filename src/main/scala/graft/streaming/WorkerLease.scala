@@ -1,14 +1,15 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 
-import scala.jdk.CollectionConverters._
+import graft.util.Fs
 
 /** Multi-worker coordination: a TTL lease with monotone fencing
   * tokens, built on the one primitive every storage system the
-  * pipeline runs against provides — atomic create-if-absent (POSIX
-  * `O_CREAT|O_EXCL` here; `ifGenerationMatch(0)` preconditions on
-  * object storage; `INSERT .. ON CONFLICT DO NOTHING` on a DB).
+  * pipeline runs against provides — atomic create-if-absent (a hard
+  * link here, `graft.util.Fs.createExclusive`; `ifGenerationMatch(0)`
+  * preconditions on object storage; `INSERT .. ON CONFLICT DO
+  * NOTHING` on a DB).
   *
   * The reference coordinates its workers with exactly this shape,
   * just implicitly: `createBucketIfNotExisting` races resolve by
@@ -26,10 +27,11 @@ import scala.jdk.CollectionConverters._
   *
   * Layout: `dir/lease-<fence>` (16-digit zero-padded), content
   * `owner TAB expiresAtMillis`. The current lease is the highest
-  * fence present. A claim file whose content never arrived (claimer
-  * crashed between create and write) counts as held-by-unknown until
-  * its mtime + ttl passes — a crash can delay takeover by one TTL,
-  * never deadlock it.
+  * fence present. A claim is created with its content in one step
+  * and rewritten atomically, so it is never seen empty; an empty or
+  * torn claim (left by builds that created the file before writing
+  * it) counts as held-by-unknown until its mtime + ttl passes — a
+  * crash can delay takeover by one TTL, never deadlock it.
   *
   * Renewal contract: `renew(owner, fence)` succeeds iff `fence` is
   * still the HIGHEST generation and the claim is owned by `owner`.
@@ -64,8 +66,8 @@ final class WorkerLease(dir: String, ttlMs: Long,
     txt.split('\t') match {
       case Array(o, e) if e.forall(_.isDigit) => Lease(o, fence, e.toLong)
       case _ =>
-        // claimer crashed before writing content: held-by-unknown
-        // until the claim FILE itself ages past one TTL
+        // empty or torn claim (an earlier build's crashed claimer):
+        // held-by-unknown until the claim FILE itself ages past one TTL
         val mtime =
           try Files.getLastModifiedTime(p).toMillis
           catch { case _: java.io.IOException => clock() }
@@ -76,15 +78,11 @@ final class WorkerLease(dir: String, ttlMs: Long,
   /** The current (highest-fence) lease, if any generation exists. */
   def holder(): Option[Lease] = {
     if (!Files.isDirectory(root)) return None
-    val fences = {
-      val s = Files.list(root)
-      try s.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case n if n.startsWith("lease-") =>
-          n.stripPrefix("lease-").toLong }
-        .toSeq
-      finally s.close()
-    }
+    val fences = Fs.withListing(root)(_
+      .map(_.getFileName.toString)
+      .collect { case n if n.startsWith("lease-") =>
+        n.stripPrefix("lease-").toLong }
+      .toSeq)
     fences.sorted.reverseIterator
       .flatMap { f =>
         val p = claimPath(f)
@@ -108,11 +106,9 @@ final class WorkerLease(dir: String, ttlMs: Long,
       case Some(l) if l.expiresAt > now => None // live rival
       case cur =>
         val next = cur.map(_.fence + 1).getOrElse(1L)
-        val p = claimPath(next)
-        try Files.createFile(p) // the atomic race — one winner
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          return None }
-        Files.write(p, s"$owner\t${now + ttlMs}".getBytes)
+        // the atomic race — one winner, visible only with its content
+        if (!Fs.createExclusive(claimPath(next),
+            s"$owner\t${now + ttlMs}".getBytes)) return None
         prune(next)
         Some(next)
     }
@@ -120,34 +116,22 @@ final class WorkerLease(dir: String, ttlMs: Long,
 
   /** Extend the lease. False means superseded (a higher fence exists)
     * or not ours — the caller MUST stop performing guarded work. */
-  def renew(owner: String, fence: Long): Boolean = {
-    val ok = holder().exists(l => l.fence == fence && l.owner == owner)
-    if (ok) {
-      // single legitimate writer per generation: plain replace is safe
-      val tmp = root.resolve(s".renew-$fence-tmp")
-      Files.write(tmp, s"$owner\t${clock() + ttlMs}".getBytes)
-      try Files.move(tmp, claimPath(fence),
-        StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      catch { case _: java.io.IOException => return false }
-    }
-    ok
-  }
+  def renew(owner: String, fence: Long): Boolean =
+    rewrite(owner, fence, clock() + ttlMs)
 
   /** Give up the lease (expire it now): the next tryAcquire wins
     * immediately instead of waiting out the TTL. */
-  def release(owner: String, fence: Long): Boolean = {
-    val ok = holder().exists(l => l.fence == fence && l.owner == owner)
-    if (ok) {
-      val tmp = root.resolve(s".release-$fence-tmp")
-      Files.write(tmp, s"$owner\t0".getBytes)
-      try Files.move(tmp, claimPath(fence),
-        StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      catch { case _: java.io.IOException => return false }
-    }
-    ok
-  }
+  def release(owner: String, fence: Long): Boolean =
+    rewrite(owner, fence, 0L)
+
+  /** Replace our own claim's expiry. Single legitimate writer per
+    * generation, so a plain atomic replace is safe. */
+  private def rewrite(owner: String, fence: Long, expiresAt: Long): Boolean =
+    holder().exists(l => l.fence == fence && l.owner == owner) &&
+      (try {
+        Fs.writeAtomic(claimPath(fence), s"$owner\t$expiresAt".getBytes)
+        true
+      } catch { case _: java.io.IOException => false })
 
   /** Acquire-or-renew, then run `f` only while holding — the
     * reference's created-flag gate around SetTTLTask, with failover.
@@ -159,15 +143,13 @@ final class WorkerLease(dir: String, ttlMs: Long,
     * tail, delete the rest. Never touches the current fence. */
   private def prune(current: Long): Unit = {
     val keepFrom = current - 4
-    val s = Files.list(root)
-    try s.iterator().asScala
+    Fs.withListing(root)(_
       .filter { p =>
         val n = p.getFileName.toString
         n.startsWith("lease-") && n.stripPrefix("lease-").toLong < keepFrom
       }
       .foreach(p => try Files.deleteIfExists(p) catch {
         case _: java.io.IOException => ()
-      })
-    finally s.close()
+      }))
   }
 }

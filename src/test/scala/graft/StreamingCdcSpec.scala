@@ -269,6 +269,49 @@ class StreamingCdcSpec extends AnyFunSuite {
     assert(ManifestTail.latest(dir, 2L) == 3L)
   }
 
+  test("writeManifest CAS: two writers racing one version — exactly " +
+      "one commits, with its own map, and no tmp file is left") {
+    import scala.util.{Failure, Success, Try}
+    import graft.cdc.ConcurrentCommitException
+    val rounds = 200
+    val maps = Seq(Map(0 -> "b0-v1-a", 1 -> "b1-v1-a"),
+      Map(2 -> "b2-v1-b", 3 -> "b3-v1-b"))
+    val broken = (1 to rounds).flatMap { round =>
+      val dir = Files.createTempDirectory(Paths.get("target"), "cas-race")
+      val writers = maps.map(_ =>
+        new CdcTable(spark, dir.toString, Seq("id"), numBuckets = 4))
+      val barrier = new java.util.concurrent.CyclicBarrier(2)
+      val out = new Array[Try[Unit]](2)
+      val threads = (0 to 1).map(i => new Thread(() => {
+        barrier.await()
+        out(i) = Try(writers(i).writeManifest(1L, maps(i)))
+      }))
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      val winners = (0 to 1).filter(out(_).isSuccess)
+      val problem =
+        if (winners.size != 1) Some(s"${winners.size} writers returned")
+        else out(1 - winners.head) match {
+          case Failure(_: ConcurrentCommitException) =>
+            val committed = new CdcTable(spark, dir.toString, Seq("id"),
+              numBuckets = 4).versionedBucketDirs
+            val leftover = graft.util.Fs.withListing(dir)(_.toSeq)
+              .map(_.getFileName.toString)
+              .filterNot(Set("manifest-1.json", "_LATEST"))
+            if (committed != (Some(1L), maps(winners.head)))
+              Some(s"committed $committed, winner wrote ${maps(winners.head)}")
+            else if (leftover.nonEmpty) Some(s"left behind $leftover")
+            else None
+          case other => Some(s"loser saw $other")
+        }
+      graft.util.Fs.deleteRecursively(dir)
+      problem.map(p => s"round $round: $p")
+    }
+    if (broken.nonEmpty)
+      fail(s"${broken.size} of $rounds rounds broke the CAS, e.g. " +
+        broken.take(3).mkString("; "))
+  }
+
   test("CdfFollow discovery cost is tail-sized, not history-sized") {
     import graft.streaming.CdfFollow
     import graft.cdc.ManifestTail
