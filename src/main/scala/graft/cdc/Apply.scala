@@ -141,16 +141,23 @@ object Apply {
               alignExpr(col(c), haveTypes(c), tpe(c)).as(c)
             else lit(null).cast(tpe(c)).as(c)) ++ MetaCols.map(col): _*)
         }
-        val s = align(cur, curPayload.toSeq).as("s")
-        val e = align(incoming, newPayload.toSeq).as("e")
-        val joinCond = pkCols.map(c => col(s"s.$c") <=> col(s"e.$c")).reduce(_ && _)
-        val eWins = col("s._sort_key").isNull ||
-          (col("e._sort_key").isNotNull && col("e._sort_key") > col("s._sort_key"))
-        val merged = s.join(e, joinCond, "full_outer").select(
-          (allPayload ++ MetaCols).map(c =>
-            when(eWins, col(s"e.$c")).otherwise(col(s"s.$c")).as(c)): _*)
-        merged
+        lastWriterWins(align(cur, curPayload.toSeq),
+          align(incoming, newPayload.toSeq), pkCols, allPayload ++ MetaCols)
     }
+  }
+
+  /** The merge join both [[merge]] and [[mergeMulti]] share: full
+    * outer on `keys` (null-safe), and per output column the event
+    * side wins when the state has no match or the event's `_sort_key`
+    * is strictly greater — so replays and late events never regress
+    * a row. */
+  private def lastWriterWins(state: DataFrame, events: DataFrame,
+      keys: Seq[String], cols: Seq[String]): DataFrame = {
+    val joinCond = keys.map(c => col(s"s.$c") <=> col(s"e.$c")).reduce(_ && _)
+    val eWins = col("s._sort_key").isNull ||
+      (col("e._sort_key").isNotNull && col("e._sort_key") > col("s._sort_key"))
+    state.as("s").join(events.as("e"), joinCond, "full_outer").select(
+      cols.map(c => when(eWins, col(s"e.$c")).otherwise(col(s"s.$c")).as(c)): _*)
   }
 
   /** Multi-table [[merge]] for the router's single-job partitioned
@@ -178,15 +185,8 @@ object Apply {
         // uniform payload on both sides: align by NAME (column order
         // in bucket files is historical), no widening needed
         val cols = incoming.columns.toSeq
-        val s = cur.select(cols.map(col): _*).as("s")
-        val e = incoming.as("e")
-        val joinCond = (tblCol +: pkCols)
-          .map(c => col(s"s.$c") <=> col(s"e.$c")).reduce(_ && _)
-        val eWins = col("s._sort_key").isNull ||
-          (col("e._sort_key").isNotNull &&
-            col("e._sort_key") > col("s._sort_key"))
-        s.join(e, joinCond, "full_outer").select(
-          cols.map(c => when(eWins, col(s"e.$c")).otherwise(col(s"s.$c")).as(c)): _*)
+        lastWriterWins(cur.select(cols.map(col): _*), incoming,
+          tblCol +: pkCols, cols)
     }
   }
 
@@ -195,6 +195,74 @@ object Apply {
   def liveView(state: DataFrame): DataFrame =
     state.filter(!coalesce(col("_is_deleted"), lit(false)))
       .drop(MetaCols: _*)
+
+  /** Post-image change feed of one commit: the rows of `post` that the
+    * commit inserted, updated or soft-deleted. `post` and `pre` are
+    * the state rows of the buckets the commit RE-POINTED, at the commit
+    * and at the version before it; `pre` is None when none of them
+    * existed before (a first commit or a new bucket), and every post
+    * row is then a change. A row changed when its PK has no pre match
+    * or its `_sort_key` or `_is_deleted` differs, so a pure compaction
+    * rewrite yields an empty feed. Lazy: no Spark action runs here. */
+  def feed(post: DataFrame, pre: Option[DataFrame],
+      pk: Seq[String]): DataFrame = pre match {
+    case None => post
+    case Some(p) =>
+      changed(post, p, pk).select(post.columns.map(c => col(s"n.$c")): _*)
+  }
+
+  /** CDF-style change feed of one commit, over the same inputs as
+    * [[feed]]: pre- AND post-images tagged with `_change_type` — the
+    * contract downstream incremental view maintenance consumes (an
+    * aggregate is maintained by ADDING insert/update_postimage rows and
+    * RETRACTING update_preimage/delete rows; the table is never
+    * rescanned). Mirrors the Delta Lake change-data-feed row set:
+    *
+    *  - `insert`            — post image of a new live row (including
+    *                          a resurrected tombstone)
+    *  - `update_preimage`   — the replaced live row's old values
+    *  - `update_postimage`  — its new values
+    *  - `delete`            — the old values of a row this commit
+    *                          tombstoned (the tombstone itself is not
+    *                          emitted; both sides of a dead→dead
+    *                          rewrite are invisible to consumers)
+    *
+    * Widen-only drift can leave `pre` without columns the commit
+    * added: pre images carry them as nulls, like a read of the old
+    * version would. Lazy: no Spark action runs here. */
+  def cdf(post: DataFrame, pre: Option[DataFrame],
+      pk: Seq[String]): DataFrame = pre match {
+    case None =>
+      post.filter(!col("_is_deleted")).withColumn("_change_type", lit("insert"))
+    case Some(p) =>
+      val cols = post.columns
+      val joined = changed(post, p, pk)
+      val preCols = p.columns.toSet
+      def oCol(c: String) =
+        if (preCols(c)) col(s"o.$c")
+        else lit(null).cast(post.schema(c).dataType).as(c)
+      val oldLive = col("o._sort_key").isNotNull && !col("o._is_deleted")
+      val postImg = joined.filter(!col("n._is_deleted"))
+        .select(cols.map(c => col(s"n.$c")) :+
+          when(oldLive, lit("update_postimage"))
+            .otherwise(lit("insert")).as("_change_type"): _*)
+      val preImg = joined.filter(oldLive)
+        .select(cols.map(oCol) :+
+          when(col("n._is_deleted"), lit("delete"))
+            .otherwise(lit("update_preimage")).as("_change_type"): _*)
+      postImg.unionByName(preImg)
+  }
+
+  /** `post` (aliased `n`) left-outer joined to `pre` (aliased `o`) on
+    * the PK, null-safe, keeping the rows whose PK is new or whose
+    * `_sort_key` or `_is_deleted` changed. */
+  private def changed(post: DataFrame, pre: DataFrame,
+      pk: Seq[String]): DataFrame =
+    post.as("n").join(pre.as("o"),
+      pk.map(c => col(s"n.$c") <=> col(s"o.$c")).reduce(_ && _), "left_outer")
+      .filter(col("o._sort_key").isNull ||
+        !(col("n._sort_key") <=> col("o._sort_key")) ||
+        !(col("n._is_deleted") <=> col("o._is_deleted")))
 
   /** Type-2 slowly-changing-dimension history from a change relation —
     * the OTHER standard CDC consumer shape next to [[merge]]'s

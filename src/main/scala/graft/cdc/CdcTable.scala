@@ -34,10 +34,12 @@ object CdcTable {
     * §6 I/O; the c-family lifecycle gates resolve the same immutable
     * versions dozens of times per run, and at 100 TB a follower
     * folding a commit log pays this once per version per consumer).
-    * Bounded: entries of stopped sessions are purged and the map is
-    * cleared wholesale past [[RelationCacheMax]] (values are plans,
-    * not data — the bound is about key accumulation in long-lived
-    * multi-session JVMs like the test runner). */
+    * Bounded: entries of stopped sessions are purged on every read
+    * (they can never hit again, and their plans pin a dead context),
+    * and the map is cleared wholesale past [[RelationCacheMax]] live
+    * entries (values are plans, not data — the bound is about key
+    * accumulation in long-lived multi-session JVMs like the test
+    * runner). */
   private val RelationCacheMax = 512
   private val relationCache =
     new java.util.concurrent.ConcurrentHashMap[
@@ -47,12 +49,16 @@ object CdcTable {
     catch { case _: Exception => -1L }
   private[cdc] def cachedRead(spark: SparkSession, paths: Seq[String])
       (mk: => DataFrame): DataFrame = {
-    if (relationCache.size > RelationCacheMax) {
-      relationCache.keySet.removeIf(_._1.sparkContext.isStopped)
-      if (relationCache.size > RelationCacheMax) relationCache.clear()
-    }
+    relationCache.keySet.removeIf(_._1.sparkContext.isStopped)
+    if (relationCache.size > RelationCacheMax) relationCache.clear()
     relationCache.computeIfAbsent(
       (spark, paths.map(p => p -> mtimeOf(p))), _ => mk)
+  }
+
+  /** The sessions keying the memo's entries, one per entry. */
+  private[graft] def relationCacheSessions: Seq[SparkSession] = {
+    import scala.jdk.CollectionConverters._
+    relationCache.keySet.asScala.toSeq.map(_._1)
   }
 }
 
@@ -350,112 +356,39 @@ class CdcTable(
     if (!Files.exists(dir.resolve(s"manifest-$v.json"))) None
     else readBuckets(manifest(v).values.toSeq)
 
-  /** Change feed: post-image rows that changed between version `v-1`
-    * and `v` (inserted, updated, or soft-deleted by that commit).
-    * Version 0 is the initial snapshot — every row is a change.
-    *
-    * Cost is bounded by the commit, not the table: only buckets
-    * RE-POINTED at `v` are read (both their `v` and `v-1` dirs) and
-    * joined on the PK — carried-forward buckets are pruned by the
-    * manifest diff, so a small batch yields a small feed even on a
-    * huge table. A pure compaction commit rewrites dirs without
-    * changing rows and correctly yields an empty feed (every post
-    * image matches its pre image). */
-  def changeFeed(v: Long): Option[DataFrame] = {
-    if (!Files.exists(dir.resolve(s"manifest-$v.json"))) None
-    else if (v == 0) readBuckets(manifest(0L).values.toSeq)
-    // the feed needs the pre-image manifest too: if v-1 was vacuumed,
-    // degrade to the same graceful None as stateAt instead of throwing
-    // NoSuchFileException out of the manifest read
-    else if (!Files.exists(dir.resolve(s"manifest-${v - 1}.json"))) None
-    else {
-      val curM = manifest(v)
-      val prevM = manifest(v - 1)
-      val repointed = curM.filter { case (b, d) => !prevM.get(b).contains(d) }
-      val pre = readBuckets(repointed.keys.flatMap(prevM.get).toSeq)
-      readBuckets(repointed.values.toSeq).map { post =>
-        pre match {
-          case None => post
-          case Some(p) =>
-            val post0 = post.as("n")
-            val prev0 = p.select(
-              (pkCols.map(col) :+ col("_sort_key") :+ col("_is_deleted")): _*)
-              .as("o")
-            val joinCond = pkCols.map(c => col(s"n.$c") <=> col(s"o.$c"))
-              .reduce(_ && _)
-            post0.join(prev0, joinCond, "left_outer")
-              .filter(col("o._sort_key").isNull ||
-                !(col("n._sort_key") <=> col("o._sort_key")) ||
-                !(col("n._is_deleted") <=> col("o._is_deleted")))
-              .select(post.columns.map(c => col(s"n.$c")): _*)
-        }
-      }
-    }
-  }
+  /** Change feed of version `v`: [[Apply.feed]] over the buckets `v`
+    * re-pointed. Version 0 is the initial snapshot — every row is a
+    * change; a commit that re-pointed nothing is an empty feed. None
+    * only when `v`'s or `v-1`'s manifest is gone (vacuumed or never
+    * committed). Cost is bounded by the commit, not the table. */
+  def changeFeed(v: Long): Option[DataFrame] =
+    feedInputs(v).map { case (post, pre) => Apply.feed(post, pre, pkCols) }
 
-  /** CDF-style change feed: pre- AND post-images of version `v`'s
-    * changes, tagged with `_change_type` — the contract downstream
-    * incremental view maintenance consumes (an aggregate is
-    * maintained by ADDING insert/update_postimage rows and
-    * RETRACTING update_preimage/delete rows; the table is never
-    * rescanned). Mirrors the Delta Lake change-data-feed row set:
-    *
-    *  - `insert`            — post image of a new live row (including
-    *                          a resurrected tombstone)
-    *  - `update_preimage`   — the replaced live row's old values
-    *  - `update_postimage`  — its new values
-    *  - `delete`            — the old values of a row this commit
-    *                          tombstoned (the tombstone itself is not
-    *                          emitted; both sides of a dead→dead
-    *                          rewrite are invisible to consumers)
-    *
-    * Same manifest-diff pruning as [[changeFeed]]: cost is bounded by
-    * the commit's re-pointed buckets, not the table. */
-  def changeFeedCdf(v: Long): Option[DataFrame] = {
+  /** CDF-style change feed of version `v` ([[Apply.cdf]]'s Delta-CDF
+    * row set), over the same commit-bounded reads as [[changeFeed]]. */
+  def changeFeedCdf(v: Long): Option[DataFrame] =
+    feedInputs(v).map { case (post, pre) => Apply.cdf(post, pre, pkCols) }
+
+  /** (post, pre) state of the buckets RE-POINTED at `v`, by manifest
+    * diff: carried-forward buckets are never read, so a small batch
+    * yields a small feed even on a huge table. `pre` is None at
+    * version 0 and when every re-pointed bucket is new. A commit that
+    * re-pointed nothing reads as the empty, correctly shaped post
+    * image. None if `v` or its pre-image manifest `v-1` is gone —
+    * checked before the manifest read, so a vacuumed pre-image is the
+    * same graceful None as [[stateAt]], never a NoSuchFileException. */
+  private def feedInputs(v: Long): Option[(DataFrame, Option[DataFrame])] =
     if (!Files.exists(dir.resolve(s"manifest-$v.json"))) None
-    else if (v == 0)
-      readBuckets(manifest(0L).values.toSeq)
-        .map(df => df.filter(!col("_is_deleted"))
-          .withColumn("_change_type", lit("insert")))
+    else if (v == 0) stateAt(0L).map(_ -> None)
     else if (!Files.exists(dir.resolve(s"manifest-${v - 1}.json"))) None
     else {
       val curM = manifest(v)
       val prevM = manifest(v - 1)
       val repointed = curM.filter { case (b, d) => !prevM.get(b).contains(d) }
-      val pre = readBuckets(repointed.keys.flatMap(prevM.get).toSeq)
-      readBuckets(repointed.values.toSeq).map { post =>
-        val cols = post.columns
-        pre match {
-          case None => post.filter(!col("_is_deleted"))
-            .withColumn("_change_type", lit("insert"))
-          case Some(p) =>
-            val joined = post.as("n").join(p.as("o"),
-              pkCols.map(c => col(s"n.$c") <=> col(s"o.$c")).reduce(_ && _),
-              "left_outer")
-              .filter(col("o._sort_key").isNull ||
-                !(col("n._sort_key") <=> col("o._sort_key")) ||
-                !(col("n._is_deleted") <=> col("o._is_deleted")))
-            // widen-only drift can leave the pre-image buckets without
-            // newly added columns — surface them as nulls, like a read
-            // of the old version would
-            val preCols = p.columns.toSet
-            def oCol(c: String) =
-              if (preCols(c)) col(s"o.$c")
-              else lit(null).cast(post.schema(c).dataType).as(c)
-            val oldLive = col("o._sort_key").isNotNull && !col("o._is_deleted")
-            val postImg = joined.filter(!col("n._is_deleted"))
-              .select(cols.map(c => col(s"n.$c")) :+
-                when(oldLive, lit("update_postimage"))
-                  .otherwise(lit("insert")).as("_change_type"): _*)
-            val preImg = joined.filter(oldLive)
-              .select(cols.map(oCol) :+
-                when(col("n._is_deleted"), lit("delete"))
-                  .otherwise(lit("update_preimage")).as("_change_type"): _*)
-            postImg.unionByName(preImg)
-        }
-      }
+      if (repointed.isEmpty) stateAt(v).map(df => (df.limit(0), None))
+      else readBuckets(repointed.values.toSeq).map(post =>
+        (post, readBuckets(repointed.keys.flatMap(prevM.get).toSeq)))
     }
-  }
 
   /** Point lookup: read ONLY the PK-hash buckets the keys fall in.
     * `keys` is a small DataFrame with exactly the PK columns (a point

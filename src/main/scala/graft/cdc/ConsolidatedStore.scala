@@ -394,16 +394,23 @@ class ConsolidatedStore(
     if (mine.isEmpty ||
       !mine.map(_._2).distinct.forall(s => Files.exists(dir.resolve(s))))
       None
-    else {
-      // one footer probe for the sort-key shape, shared by every
-      // segment group this read unions
-      val schema = segSchema(c.payload, sortKeyTypeOf(mine.head._2))
-      Some(mine.groupBy(_._2).map { case (seg, pairs) =>
-        spark.read.schema(schema).parquet(s"$path/$seg")
-          .filter(col("table_name") === table &&
-            col("_bucket").isin(pairs.map(_._1): _*))
-      }.reduce(_ unionByName _).drop("table_name", "_bucket"))
-    }
+    else Some(readPairs(table, c.payload, mine))
+  }
+
+  /** One table's rows at the given (bucket, segment) pairs, read under
+    * `payload` (older segments null-fill widened columns): one scan
+    * per segment with the `table_name`/`_bucket` predicates pushed
+    * into it, unioned. One footer probe for the sort-key shape is
+    * shared by every segment group. `pairs` is non-empty and its
+    * segments exist (the callers check). */
+  private def readPairs(table: String, payload: StructType,
+      pairs: Seq[(Int, String)]): DataFrame = {
+    val schema = segSchema(payload, sortKeyTypeOf(pairs.head._2))
+    pairs.groupBy(_._2).map { case (seg, ps) =>
+      spark.read.schema(schema).parquet(s"$path/$seg")
+        .filter(col("table_name") === table &&
+          col("_bucket").isin(ps.map(_._1): _*))
+    }.reduce(_ unionByName _).drop("table_name", "_bucket")
   }
 
   /** Fleet-wide current state (all tables, `table_name` kept) — the
@@ -445,116 +452,55 @@ class ConsolidatedStore(
     sortKeyTypeCache.computeIfAbsent(seg, s =>
       spark.read.parquet(s"$path/$s").schema("_sort_key").dataType)
 
-  /** Post-image change feed for one table at commit `v` — the same
-    * contract as [[CdcTable.changeFeed]], so IVM consumers keep
-    * working when a fleet moves to the consolidated layout. Cost is
-    * bounded by the COMMIT, not the table: only this table's buckets
-    * RE-POINTED at `v` are read (their `v` and `v-1` segments,
-    * pruned by the pushed table/bucket predicates) — carried-forward
-    * buckets never scan. Version 0 (or a table's first appearance)
-    * is the initial snapshot. None if `v` (or its pre-image commit)
-    * was vacuumed. */
+  /** Post-image change feed for one table at commit `v` —
+    * [[Apply.feed]], the same rule as [[CdcTable.changeFeed]], so IVM
+    * consumers keep working when a fleet moves to the consolidated
+    * layout. Cost is bounded by the COMMIT, not the table (see
+    * [[feedInputs]]). Version 0 (or a table's first appearance) is
+    * the initial snapshot; a commit that did not re-point the table
+    * is an empty feed. None if `v` (or its pre-image commit) was
+    * vacuumed or the table is unknown at `v`. */
   def changeFeed(table: String, v: Long): Option[DataFrame] =
-    feedInputs(table, v).map {
-      case (post, None) => post
-      case (post, Some(pre)) =>
-        val c = readCommit(v)
-        val pk = c.pk
-        val post0 = post.as("n")
-        val prev0 = pre.select(
-          (pk.map(col) :+ col("_sort_key") :+ col("_is_deleted")): _*)
-          .as("o")
-        val joinCond = pk.map(x => col(s"n.$x") <=> col(s"o.$x"))
-          .reduce(_ && _)
-        post0.join(prev0, joinCond, "left_outer")
-          .filter(col("o._sort_key").isNull ||
-            !(col("n._sort_key") <=> col("o._sort_key")) ||
-            !(col("n._is_deleted") <=> col("o._is_deleted")))
-          .select(post.columns.map(x => col(s"n.$x")): _*)
-    }
+    feedInputs(table, v).map { case (post, pre, pk) =>
+      Apply.feed(post, pre, pk) }
 
-  /** CDF-style feed (pre- AND post-images tagged `_change_type`) —
-    * [[CdcTable.changeFeedCdf]]'s row set over the consolidated
-    * layout: insert / update_preimage / update_postimage / delete,
-    * tombstone rewrites invisible. Same commit-bounded pruning as
-    * [[changeFeed]]. */
+  /** CDF-style feed for one table at commit `v` ([[Apply.cdf]]'s
+    * Delta-CDF row set), over the same reads as [[changeFeed]]. */
   def changeFeedCdf(table: String, v: Long): Option[DataFrame] =
-    feedInputs(table, v).map {
-      case (post, None) =>
-        post.filter(!col("_is_deleted"))
-          .withColumn("_change_type", lit("insert"))
-      case (post, Some(pre)) =>
-        val pk = readCommit(v).pk
-        val cols = post.columns
-        val joined = post.as("n").join(pre.as("o"),
-          pk.map(x => col(s"n.$x") <=> col(s"o.$x")).reduce(_ && _),
-          "left_outer")
-          .filter(col("o._sort_key").isNull ||
-            !(col("n._sort_key") <=> col("o._sort_key")) ||
-            !(col("n._is_deleted") <=> col("o._is_deleted")))
-        // widen-only drift: pre-image segments read under the widened
-        // schema already null-fill, so both sides share one column set
-        val oldLive = col("o._sort_key").isNotNull && !col("o._is_deleted")
-        val postImg = joined.filter(!col("n._is_deleted"))
-          .select(cols.map(x => col(s"n.$x")) :+
-            when(oldLive, lit("update_postimage"))
-              .otherwise(lit("insert")).as("_change_type"): _*)
-        val preImg = joined.filter(oldLive)
-          .select(cols.map(x => col(s"o.$x")) :+
-            when(col("n._is_deleted"), lit("delete"))
-              .otherwise(lit("update_preimage")).as("_change_type"): _*)
-        postImg.unionByName(preImg)
-    }
+    feedInputs(table, v).map { case (post, pre, pk) =>
+      Apply.cdf(post, pre, pk) }
 
-  /** (post, pre) bucket reads for the table's pairs RE-POINTED at
-    * commit `v` — the shared pruning for both feed flavors. None when
-    * `v`/`v-1` is unreadable or nothing re-pointed for this table.
-    * `pre` is None for the table's first appearance. */
+  /** (post, pre, pk) for the table's pairs RE-POINTED at commit `v`
+    * — the shared pruning for both feed flavors: carried-forward
+    * buckets never scan, and the pushed table/bucket predicates prune
+    * the `v` and `v-1` segments. `pre` is None for the table's first
+    * appearance. A commit that did not re-point the table reads as
+    * the empty, correctly shaped post image. None when the table is
+    * unknown at `v`, or `v`, `v-1` or a needed segment was vacuumed. */
   private def feedInputs(table: String, v: Long)
-      : Option[(DataFrame, Option[DataFrame])] = {
+      : Option[(DataFrame, Option[DataFrame], Seq[String])] = {
     val c = resolved(v).getOrElse(return None)
     val mine = c.entries.collect { case ((t, b), seg) if t == table =>
       b -> seg
     }
     if (mine.isEmpty) return None
-    if (v == 0) return stateAt(table, 0L).map(df => (df, None))
+    if (v == 0) return stateAt(table, 0L).map(df => (df, None, c.pk))
     val prev = resolved(v - 1).getOrElse(return None)
     val repointed = mine.filter { case (b, seg) =>
       !prev.entries.get((table, b)).contains(seg)
     }.toSeq
     if (repointed.isEmpty)
-      // a commit that didn't touch this table: empty feed, correct
-      // shape (read one bucket's post dir, filter to nothing)
-      return stateAt(table, v).map(df => (df.limit(0), None))
-    // vacuumed segments on either side → None (same as a dropped
-    // commit), never a mid-scan read error
-    val needed = (repointed.map(_._2) ++ repointed.flatMap { case (b, _) =>
-      prev.entries.get((table, b))
-    }).distinct
-    if (!needed.forall(s => Files.exists(dir.resolve(s)))) return None
-    val schema = segSchema(c.payload, sortKeyTypeOf(repointed.head._2))
-    def readPairs(pairs: Seq[(Int, String)]): DataFrame =
-      pairs.groupBy(_._2).map { case (seg, ps) =>
-        spark.read.schema(schema).parquet(s"$path/$seg")
-          .filter(col("table_name") === table &&
-            col("_bucket").isin(ps.map(_._1): _*))
-      }.reduce(_ unionByName _).drop("table_name", "_bucket")
-    val post = readPairs(repointed)
+      return stateAt(table, v).map(df => (df.limit(0), None, c.pk))
     val prePairs = repointed.flatMap { case (b, _) =>
       prev.entries.get((table, b)).map(b -> _)
     }
-    val pre =
+    // vacuumed segments on either side → None (same as a dropped
+    // commit), never a mid-scan read error
+    if (!(repointed ++ prePairs).forall(p => Files.exists(dir.resolve(p._2))))
+      None
+    else Some((readPairs(table, c.payload, repointed),
       if (prePairs.isEmpty) None
-      else {
-        val preSchema = segSchema(c.payload,
-          sortKeyTypeOf(prePairs.head._2))
-        Some(prePairs.groupBy(_._2).map { case (seg, ps) =>
-          spark.read.schema(preSchema).parquet(s"$path/$seg")
-            .filter(col("table_name") === table &&
-              col("_bucket").isin(ps.map(_._1): _*))
-        }.reduce(_ unionByName _).drop("table_name", "_bucket"))
-      }
-    Some((post, pre))
+      else Some(readPairs(table, c.payload, prePairs)), c.pk))
   }
 
   /** Fold every table's live pointer set into ONE fresh segment — the

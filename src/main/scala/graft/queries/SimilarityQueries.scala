@@ -545,7 +545,7 @@ object SimilarityQueries {
       copyIndex(baseIndexFixture(s, d), dir)
       // the feed reads committed immutable bucket files — lazy plans
       // stay valid across the index writes below; a commit that
-      // repointed no buckets has no feed (foreach skips it)
+      // repointed no buckets has an empty feed (both branches skip it)
       for (v <- 1L to t.currentVersion.get)
         t.changeFeedCdf(v).foreach { cdfLive =>
           // the feed feeds three consumers (the branch probe, the

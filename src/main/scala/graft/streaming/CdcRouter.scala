@@ -279,23 +279,11 @@ class CdcRouter(
           case Seq((pk, _)) => // whole batch, no routing filter
             storeFor(pk).applyBatch(events, batchId); ()
           case gs =>
-            // disjoint table sets → independent store CASes: overlap
-            // them (same settle-all discipline as the grouped apply)
-            val gPool = java.util.concurrent.Executors.newFixedThreadPool(
-              math.min(4, gs.length))
-            try {
-              implicit val ec: scala.concurrent.ExecutionContext =
-                scala.concurrent.ExecutionContext.fromExecutorService(gPool)
-              val settled = scala.concurrent.Await.result(
-                scala.concurrent.Future.sequence(gs.map { case (pk, g) =>
-                  scala.concurrent.Future {
-                    storeFor(pk).applyBatch(
-                      events.filter(col("table_name").isin(g: _*)), batchId)
-                  }.transform(t => scala.util.Success(t))
-                }), scala.concurrent.duration.Duration.Inf)
-              settled.collectFirst { case scala.util.Failure(e) => throw e }
-              ()
-            } finally gPool.shutdown()
+            // disjoint table sets → independent store CASes: overlap them
+            settleAll(4, gs.map { case (pk, g) => () =>
+              storeFor(pk).applyBatch(
+                events.filter(col("table_name").isin(g: _*)), batchId)
+            })
         }
         if (names.nonEmpty &&
           stores.values.exists(_.currentVersion.isDefined))
@@ -321,56 +309,45 @@ class CdcRouter(
         applyBatchPartitioned(scopedToGroup, g, batchId)
       }
       if (groups.length == 1) applyGroup(groups.head)
-      else if (groups.nonEmpty) {
+      else if (groups.nonEmpty)
         // groups touch DISJOINT table sets, so their single-job
         // applies are independent — overlap them (each job's wall is
         // part driver-side commit loop, which would otherwise
-        // serialize; same settle-all discipline as the pool below)
-        val gPool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(4, groups.length))
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(gPool)
-          val settled = scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(groups.map(g =>
-              scala.concurrent.Future(applyGroup(g))
-                .transform(t => scala.util.Success(t)))),
-            scala.concurrent.duration.Duration.Inf)
-          settled.collectFirst { case scala.util.Failure(e) => throw e }
-          ()
-        } finally gPool.shutdown()
-      }
-      if (poolNames.nonEmpty) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(mergePoolWidth, poolNames.length)))
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val merges = poolNames.map { name =>
-            scala.concurrent.Future {
-              table(name).applyBatch(
-                events.filter(col("table_name") === name), batchId)
-            }
-          }
-          // settle EVERY merge (Try-wrapped) before propagating the first
-          // failure: Future.sequence rethrows on the first failed future
-          // while sibling merges are still running, which would (a) let
-          // the finally-block unpersist `events` under a live job and
-          // (b) hide sibling outcomes. Partial-failure replay semantics:
-          // the foreachBatch retry re-applies the batch, and tables that
-          // already committed commit an extra version — final STATE is
-          // idempotent via the PK merge (CdcTable.applyBatch), but
-          // per-table version counts may diverge across a retried batch.
-          val settled = scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(
-              merges.map(_.transform(t => scala.util.Success(t)))),
-            scala.concurrent.duration.Duration.Inf)
-          settled.collectFirst { case scala.util.Failure(e) => throw e }
-          ()
-        } finally pool.shutdown()
-      }
+        // serialize)
+        settleAll(4, groups.map(g => () => applyGroup(g)))
+      // Partial-failure replay semantics: the foreachBatch retry
+      // re-applies the batch, and tables that already committed commit
+      // an extra version — final STATE is idempotent via the PK merge
+      // (CdcTable.applyBatch), but per-table version counts may diverge
+      // across a retried batch.
+      settleAll(mergePoolWidth, poolNames.map(name => () =>
+        table(name).applyBatch(
+          events.filter(col("table_name") === name), batchId)))
     } finally { events.unpersist(); () }
   }
+
+  /** Run `tasks` on a fixed pool of at most `width` threads and
+    * settle EVERY one (Try-wrapped) before propagating the first
+    * failure: Future.sequence rethrows on the first failed future
+    * while siblings are still running, which would (a) let the
+    * caller's finally-block unpersist the batch under a live job and
+    * (b) hide sibling outcomes. */
+  private def settleAll(width: Int, tasks: Seq[() => Any]): Unit =
+    if (tasks.nonEmpty) {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, math.min(width, tasks.length)))
+      try {
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        val settled = scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(tasks.map(t =>
+            scala.concurrent.Future(t())
+              .transform(r => scala.util.Success(r)))),
+          scala.concurrent.duration.Duration.Inf)
+        settled.collectFirst { case scala.util.Failure(e) => throw e }
+        ()
+      } finally pool.shutdown()
+    }
 
   /** The last applyBatch's dispatch decision: (partitioned-apply
     * groups, pool-path tables). Introspection for specs and ops

@@ -43,9 +43,11 @@ object CdfFollow {
 
   /** Start following `table`. `onVersion(v, cdf)` runs once per
     * committed version (see delivery semantics above), ascending
-    * within and across batches; versions whose pre-image manifest was
-    * vacuumed are skipped (same graceful degradation as
-    * `changeFeedCdf`). Stop via the returned query. */
+    * within and across batches. A commit that re-pointed no bucket
+    * (an empty batch) delivers its empty feed, so consumers stay
+    * version-aligned; only versions whose manifest or pre-image
+    * manifest was vacuumed are skipped (`changeFeedCdf` is None only
+    * then). Stop via the returned query. */
   def run(spark: SparkSession, table: CdcTable,
       checkpointDir: String, onVersion: (Long, org.apache.spark.sql.DataFrame) => Unit,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =

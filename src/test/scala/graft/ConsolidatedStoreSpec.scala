@@ -439,34 +439,91 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       numBuckets = 2, consolidated = true)
     val pool = new CdcRouter(spark, freshDir("cstore-feedp"), _ => Seq("id"),
       numBuckets = 2, partitionedApplyMinTables = Int.MaxValue)
+    // v2 widens the payload (extra) while updating id 2 and inserting
+    // id 9; v3 re-inserts id 1, which v1 deleted; v4 is a compaction.
+    // Every batch touches every table, so per-table CdcTable versions
+    // line up with the fleet's.
+    def widened(ids: Seq[Long], op: String, seq: Long): DataFrame =
+      (for (t <- 0 until nT; id <- ids) yield (s"t$t", id))
+        .toDF("table_name", "id")
+        .select($"table_name", struct($"id",
+          concat(lit(s"w$seq-"), $"id").as("val"),
+          concat(lit("x"), $"id").as("extra")).as("row"),
+          lit(op).as("op"), key(seq))
     for (r <- Seq(cons, pool)) {
       r.applyBatch(inserts(nT, 4, 0L), 0L)
       r.applyBatch(mutations(nT, 1L), 1L)
+      r.applyBatch(widened(Seq(2L), "UPDATE", 2L)
+        .unionByName(widened(Seq(9L), "INSERT", 2L)), 2L)
+      r.applyBatch(widened(Seq(1L), "INSERT", 3L), 3L)
     }
+    cons.store.compact()
+    for (i <- 0 until nT) pool.table(s"t$i").compact(minFiles = 1)
+    val versions = 0L to 4L
+
+    // payload columns widen at v2: pre-widen images read extra as null
+    def extraOf(df: DataFrame) =
+      if (df.columns.contains("extra")) $"extra" else lit(null).cast("string")
     def feedRows(df: DataFrame): Seq[String] =
-      df.select($"id", $"val", $"_is_deleted")
+      df.select($"id", $"val", extraOf(df), $"_is_deleted")
         .collect().map(_.toString).sorted.toSeq
     def cdfRows(df: DataFrame): Seq[String] =
-      df.select($"id", $"val", $"_is_deleted", $"_change_type")
+      df.select($"id", $"val", extraOf(df), $"_is_deleted", $"_change_type")
         .collect().map(_.toString).sorted.toSeq
-    for (i <- 0 until nT; v <- 0L to 1L) {
+    // the Delta-CDF row rules applied to two collected states
+    def bruteCdf(pre: Option[DataFrame], post: DataFrame): Seq[String] = {
+      def byId(df: DataFrame) =
+        df.select($"id", $"val", extraOf(df), $"_is_deleted",
+          $"_sort_key".cast("string")).collect()
+          .map(r => r.getLong(0) -> r).toMap
+      val before = pre.map(byId).getOrElse(Map.empty)
+      def img(r: org.apache.spark.sql.Row, tpe: String) =
+        s"[${r.get(0)},${r.get(1)},${r.get(2)},${r.get(3)},$tpe]"
+      byId(post).values.toSeq.flatMap { n =>
+        val o = before.get(n.getLong(0))
+        val changed = o.forall(o => o.get(4) != n.get(4) || o.get(3) != n.get(3))
+        val oldLive = o.exists(!_.getBoolean(3))
+        if (!changed) Nil
+        else (if (n.getBoolean(3)) Nil
+          else Seq(img(n, if (oldLive) "update_postimage" else "insert"))) ++
+          (if (!oldLive) Nil
+          else Seq(img(o.get, if (n.getBoolean(3)) "delete" else "update_preimage")))
+      }.sorted
+    }
+    for (i <- 0 until nT; v <- versions) {
       val n = s"t$i"
+      val tbl = pool.table(n)
       assert(feedRows(cons.store.changeFeed(n, v).get) ==
-        feedRows(pool.table(n).changeFeed(v).get),
+        feedRows(tbl.changeFeed(v).get),
         s"changeFeed diverged for $n@v$v")
-      assert(cdfRows(cons.store.changeFeedCdf(n, v).get) ==
-        cdfRows(pool.table(n).changeFeedCdf(v).get),
+      val cdf = cdfRows(cons.store.changeFeedCdf(n, v).get)
+      assert(cdf == cdfRows(tbl.changeFeedCdf(v).get),
         s"changeFeedCdf diverged for $n@v$v")
+      val pre = if (v == 0) None else Some(v - 1)
+      assert(cdf == bruteCdf(pre.map(tbl.stateAt(_).get), tbl.stateAt(v).get),
+        s"pool CDF is not the state diff for $n@v$v")
+      assert(cdf == bruteCdf(pre.map(cons.store.stateAt(n, _).get),
+        cons.store.stateAt(n, v).get),
+        s"consolidated CDF is not the state diff for $n@v$v")
+      v match {
+        case 2L => // widen: update of a live row, insert of a new one
+          assert(cdf.count(_.endsWith("update_postimage]")) == 1 &&
+            cdf.count(_.endsWith("insert]")) == 1)
+        case 3L => assert(cdf == Seq("[1,w3-1,x1,false,insert]"))
+        case 4L => assert(cdf.isEmpty && feedRows(tbl.changeFeed(v).get).isEmpty)
+        case _ =>
+      }
     }
     // feed volume is commit-bounded: v1 touched ids {0,1} per table
     assert(cons.store.changeFeed("t2", 1L).get.count() <= 4)
     // a commit that does not touch a table yields an EMPTY feed
     val sparse = spark.range(1).select(lit("t0").as("table_name"),
-      struct(lit(0L).as("id"), lit("s2").as("val")).as("row"),
-      lit("UPDATE").as("op"), key(2L))
-    cons.applyBatch(sparse, 2L)
-    assert(cons.store.changeFeed("t3", 2L).get.count() == 0)
-    assert(cons.store.changeFeed("t0", 2L).get.count() == 1)
+      struct(lit(0L).as("id"), lit("s5").as("val"),
+        lit("x").as("extra")).as("row"),
+      lit("UPDATE").as("op"), key(5L))
+    cons.applyBatch(sparse, 5L)
+    assert(cons.store.changeFeed("t3", 5L).get.count() == 0)
+    assert(cons.store.changeFeed("t0", 5L).get.count() == 1)
   }
 
   /** Rewrite a fixture avro container with `source_metadata.table`

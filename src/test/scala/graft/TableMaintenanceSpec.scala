@@ -114,6 +114,25 @@ class TableMaintenanceSpec extends AnyFunSuite {
     assert(t.changeFeed(0L).isEmpty) // and the vacuumed version itself
   }
 
+  test("a commit that re-points nothing yields an empty feed, not None") {
+    import spark.implicits._
+    val t = new CdcTable(spark, tmp("cfnoop"), Seq("id"), numBuckets = 2)
+    val events = Seq((1L, "a"), (2L, "b")).toDF("id", "val")
+      .select(struct($"id", $"val").as("row"), lit("INSERT").as("op"),
+        struct(lit(1L).as("ts_ms"), lit(1L).as("scn"), lit("").as("rs_id"),
+          lit(0L).as("ssn")).as("sort_key"))
+    assert(t.applyBatch(events, 0L) == 0L)
+    val v = t.applyBatch(events.limit(0), 1L)
+    assert(v == 1L && t.stateAt(v).isDefined)
+    // None would read as "vacuumed" and a follower would skip a
+    // committed version
+    val feed = t.changeFeed(v)
+    val cdf = t.changeFeedCdf(v)
+    assert(feed.exists(_.isEmpty) && cdf.exists(_.isEmpty))
+    assert(feed.get.columns.toSeq == t.stateAt(v).get.columns.toSeq)
+    assert(cdf.get.columns.last == "_change_type")
+  }
+
   test("maintenance rewrites never clobber a concurrently committed bucket dir") {
     val dir = tmp("maintrace")
     val t = new CdcTable(spark, dir, Seq("EMPLOYEE_ID"), numBuckets = 4)
