@@ -8,7 +8,9 @@ import graft.util.Tables.load
 
 /** CDC pipeline surface as driver-checkable queries:
   *
-  *  - c01: envelope decode of the reference's snapshot fixture
+  *  - c01: envelope decode of the snapshot fixture, `dump.avro` in
+  *    `DatastreamFixtures.dir` (the reference's file where a checkout
+  *    holds it, else the generated twin)
   *  - c02: the full SURVEY §7.2 replay (snapshot + CDC + PK-update +
   *    delete) through the merge, dumping the final state
   *  - c05: the event-collapse operator applied to the events table
@@ -22,10 +24,9 @@ import graft.util.Tables.load
   */
 object CdcPipeline {
 
-  private val fixtures = "/root/reference/src/test/resources"
+  private def fixtures = graft.sources.DatastreamFixtures.dir
 
-  private val replayFiles = Seq("dump.avro", "insert.avro", "update.avro",
-    "update-pk.avro", "delete.avro")
+  private def replayFiles = graft.sources.DatastreamFixtures.files
 
   // One shared fixture replay per session: the sequential-merge
   // capability runs EXACTLY ONCE per session (fresh in every session
@@ -753,8 +754,8 @@ object CdcPipeline {
     })
 
   val oracle: Map[String, String] = Map(
-    // positions are decode-time facts of the FIXED reference fixtures
-    // (read-only), so the oracle pins them as literals — the same
+    // positions are decode-time facts of the FIXED fixture files
+    // (DatastreamFixtures), so the oracle pins them as literals — the same
     // golden-fixture discipline as c08/c12; `dense` is the structural
     // invariant (per-file positions are 0..n−1 with no gaps/dups)
     "c22_position_bookkeeping" -> ("SELECT * FROM (VALUES " +

@@ -16,7 +16,7 @@ import graft.streaming.CdcRouter
   * :558-570, :669-672). */
 class AllowlistRouterSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/src/test/resources"
+  private def fixtures = graft.sources.DatastreamFixtures.dir
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -11,7 +11,7 @@ import graft.cdc.{Apply, CdcTable, Decode}
   * docs/OracleDatastream-cdcSource.md:114-119. */
 class CdcApplySpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/src/test/resources"
+  private def fixtures = graft.sources.DatastreamFixtures.dir
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -8,12 +8,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.Decode
 import graft.sources.DatastreamAvro
 
-/** Golden-file decode tests against the reference's own Avro fixtures
-  * (read-only at /root/reference/src/test/resources), mirroring the
-  * expectations of the reference's DatastreamEventConsumerTest. */
+/** Golden-file decode tests against the reference's five Avro fixtures
+  * (`DatastreamFixtures.dir`: the real files where a reference checkout
+  * holds them, else the set generated from FIXTURES.md §1–2 and the
+  * golden locks), mirroring the expectations of the reference's
+  * DatastreamEventConsumerTest. */
 class CdcDecodeSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/src/test/resources"
+  private def fixtures = graft.sources.DatastreamFixtures.dir
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

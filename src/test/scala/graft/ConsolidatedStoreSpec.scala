@@ -553,7 +553,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       "foreachBatch → one CAS per batch; checkpointed restart " +
       "processes only new files, exactly once") {
     import graft.sources.DatastreamAvro
-    val fixtures = "/root/reference/src/test/resources"
+    val fixtures = graft.sources.DatastreamFixtures.dir
     val root = Files.createTempDirectory(Paths.get("target"), "cstore-e2e")
     val src = root.resolve("in"); Files.createDirectories(src)
     val ckpt = root.resolve("ckpt").toString
@@ -728,7 +728,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     import graft.sources.DatastreamAvro
     import graft.streaming.WorkerLease
     import org.apache.spark.sql.streaming.Trigger
-    val fixtures = "/root/reference/src/test/resources"
+    val fixtures = graft.sources.DatastreamFixtures.dir
     val trig = Trigger.ProcessingTime(100L)
     // checkpointInterval = 1 → every commit is a full checkpoint, so
     // vacuum's anchor equals the retention head and commit files
@@ -803,7 +803,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     import graft.cdc.TableAllowlist
     import graft.sources.DatastreamAvro
     import org.apache.spark.sql.streaming.Trigger
-    val fixtures = "/root/reference/src/test/resources"
+    val fixtures = graft.sources.DatastreamFixtures.dir
     val trig = Trigger.ProcessingTime(100L)
     val src = Files.createTempDirectory(Paths.get("target"), "cwiden-src")
     Files.copy(Paths.get(s"$fixtures/dump.avro"),
@@ -857,7 +857,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     import graft.cdc.TableAllowlist
     import graft.sources.DatastreamAvro
     import org.apache.spark.sql.streaming.Trigger
-    val fixtures = "/root/reference/src/test/resources"
+    val fixtures = graft.sources.DatastreamFixtures.dir
     val trig = Trigger.ProcessingTime(100L)
     val src = Files.createTempDirectory(Paths.get("target"), "gwiden-src")
     Files.copy(Paths.get(s"$fixtures/dump.avro"),

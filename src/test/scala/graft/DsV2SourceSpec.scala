@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * binaryFile-based reader on schema and content. */
 class DsV2SourceSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/src/test/resources"
+  private def fixtures = graft.sources.DatastreamFixtures.dir
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -9,7 +9,7 @@ import graft.sources.{DatastreamAvro, DatastreamJson}
 
 class ExtensionsAndJsonSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/src/test/resources"
+  private def fixtures = graft.sources.DatastreamFixtures.dir
 
   lazy val spark: SparkSession = {
     // builder extensions are ignored when another suite's session is

@@ -57,7 +57,7 @@ class RetrySpec extends AnyFunSuite {
     val nested = root.resolve("HR_EMPLOYEES/2021/03/22/05/13")
     java.nio.file.Files.createDirectories(nested)
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/src/test/resources/insert.avro"),
+      java.nio.file.Paths.get(graft.sources.DatastreamFixtures.dir, "insert.avro"),
       nested.resolve("keyv2_oracle-cdc-logminer_0_1.avro"))
     val decoded = graft.cdc.Decode.fromAvro(spark,
       s"${root.toString}/HR_EMPLOYEES/*/*/*/*/*/*.avro").collect().head

@@ -16,7 +16,7 @@ import graft.util.Retry
   * a real checkpointed pipeline exactly-once. */
 class SourceAdminSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/src/test/resources"
+  private def fixtures = graft.sources.DatastreamFixtures.dir
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

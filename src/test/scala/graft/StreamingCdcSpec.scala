@@ -16,7 +16,7 @@ import graft.streaming.CdcStream
   * exactly-once, including a stop/restart with late-arriving files. */
 class StreamingCdcSpec extends AnyFunSuite {
 
-  private val fixtures = "/root/reference/src/test/resources"
+  private def fixtures = graft.sources.DatastreamFixtures.dir
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

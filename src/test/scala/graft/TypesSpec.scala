@@ -66,7 +66,7 @@ class TypesSpec extends AnyFunSuite {
 
   test("avro envelope schema of the reference fixtures converts") {
     val schema = new org.apache.avro.Schema.Parser()
-      .parse(new java.io.File("/root/reference/src/test/resources/insert.avro") match {
+      .parse(new java.io.File(graft.sources.DatastreamFixtures.dir, "insert.avro") match {
         case f =>
           val r = new org.apache.avro.file.DataFileReader(
             f, new org.apache.avro.generic.GenericDatumReader[Any]())
