@@ -26,8 +26,10 @@ object CdcTable {
     * existing names; manifests CAS), so a dir set's file listing and
     * merged footer schema can only go stale if the dirs are deleted and
     * recreated at the same names — which the mtime fingerprint in the
-    * key detects. Values are LAZY plans: every action still reads the
-    * parquet bytes fresh from disk; what the memo removes is the
+    * key detects. A dir the driver cannot stat has no fingerprint, so
+    * a read that names one is not memoized. Values are LAZY plans:
+    * every action still reads the parquet bytes fresh from disk; what
+    * the memo removes is the
     * per-read DRIVER cost — one file listing plus one distributed
     * mergeSchema footer-inference job per `spark.read` — that every
     * stateAt/changeFeed resolve was re-paying (guide §5 driver work,
@@ -44,15 +46,16 @@ object CdcTable {
   private val relationCache =
     new java.util.concurrent.ConcurrentHashMap[
       (SparkSession, Seq[(String, Long)]), DataFrame]()
-  private def mtimeOf(p: String): Long =
-    try Files.getLastModifiedTime(Paths.get(p)).toMillis
-    catch { case _: Exception => -1L }
-  private[cdc] def cachedRead(spark: SparkSession, paths: Seq[String])
+  private def mtimeOf(p: String): Option[Long] =
+    try Some(Files.getLastModifiedTime(Paths.get(p)).toMillis)
+    catch { case _: Exception => None }
+  private[graft] def cachedRead(spark: SparkSession, paths: Seq[String])
       (mk: => DataFrame): DataFrame = {
     relationCache.keySet.removeIf(_._1.sparkContext.isStopped)
     if (relationCache.size > RelationCacheMax) relationCache.clear()
-    relationCache.computeIfAbsent(
-      (spark, paths.map(p => p -> mtimeOf(p))), _ => mk)
+    val stamps = paths.map(mtimeOf)
+    if (stamps.contains(None)) mk
+    else relationCache.computeIfAbsent((spark, paths.zip(stamps.flatten)), _ => mk)
   }
 
   /** The sessions keying the memo's entries, one per entry. */
@@ -222,15 +225,12 @@ class CdcTable(
   /** Merge one micro-batch of decoded change events; rewrites only the
     * PK buckets present in the batch. Returns the committed version.
     *
-    * The batch is persisted for the scope of this call: it is consumed
-    * twice (touched-bucket discovery, then the merge) and upstream is
-    * an Avro decode that would otherwise run twice per micro-batch. */
-  def applyBatch(events0: DataFrame, batchId: Long): Long = {
-    val events = events0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applyBatchPersisted(events, batchId)
-    finally { events.unpersist(); () }
-  }
+    * The batch is persisted for the scope of this call unless the
+    * caller already persisted it: it is consumed twice (touched-bucket
+    * discovery, then the merge) and upstream is an Avro decode that
+    * would otherwise run twice per micro-batch. */
+  def applyBatch(events: DataFrame, batchId: Long): Long =
+    graft.util.Persist.scoped(events)(applyBatchPersisted(_, batchId))
 
   private def applyBatchPersisted(events: DataFrame, batchId: Long): Long = {
     val cur = currentVersion

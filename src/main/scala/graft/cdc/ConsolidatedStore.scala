@@ -233,12 +233,8 @@ class ConsolidatedStore(
     * `(table_name, row struct, op, sort_key)`. Returns the committed
     * version. At-least-once replays are idempotent on final state
     * (sort-key-guarded LWW). */
-  def applyBatch(events0: DataFrame, batchId: Long): Long = {
-    val events = events0.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applyPersisted(events, batchId)
-    finally { events.unpersist(); () }
-  }
+  def applyBatch(events: DataFrame, batchId: Long): Long =
+    graft.util.Persist.scoped(events)(applyPersisted(_, batchId))
 
   private def applyPersisted(events: DataFrame, batchId: Long): Long = {
     val cur = currentVersion.map { v =>

@@ -20,19 +20,24 @@ import graft.types.AvroSchemaConverter
 /** Reads Datastream-style Avro container files into DataFrames.
   *
   * The runtime ships no spark-avro module, so this is a thin source
-  * built on Spark's `binaryFile` format + the core avro-1.12 jar that
-  * IS on the classpath: files are listed/read distributed (one task
-  * per file/split), and each task decodes its files' records with
+  * over raw file bytes + the core avro-1.12 jar that IS on the
+  * classpath: each task decodes its files' records with
   * `DataFileStream`, converting to Spark rows under a fixed target
   * schema (reference wire format: FIXTURES.md §1, consumed at
   * DatastreamEventConsumer.java:222-258 in the reference — re-expressed
   * here as a vectorizable DataFrame source instead of a row callback).
   *
-  * Scale: listing and decode parallelize per file across executors;
-  * per-file schema is honored independently (drift-safe — a field
-  * missing in an old file is null), matching the reference's
-  * file-granularity schema keys. Decoding is the only non-codegen step;
-  * everything downstream is columnar/codegen.
+  * Listing: the batch [[read]] lists through Spark's `binaryFile` file
+  * index. The streaming [[readStream]] lists the whole glob on the
+  * driver on every trigger, through the Hadoop `FileSystem` API
+  * ([[DatastreamFileSource]]), and starts no Spark job for it; a late
+  * file in any folder is planned on the next trigger.
+  *
+  * Scale: decode parallelizes per file across executors; per-file
+  * schema is honored independently (drift-safe — a field missing in an
+  * old file is null), matching the reference's file-granularity schema
+  * keys. Decoding is the only non-codegen step; everything downstream
+  * is columnar/codegen.
   */
 object DatastreamAvro {
 
@@ -115,15 +120,14 @@ object DatastreamAvro {
     decodeBinary(spark, binary, target)
   }
 
-  /** binaryFile's fixed source schema (streaming requires it stated). */
-  private val binaryFileSchema = StructType(Seq(
-    StructField("path", StringType),
-    StructField("modificationTime", TimestampType),
-    StructField("length", LongType),
-    StructField("content", BinaryType)))
-
-  /** Streaming read over a directory of avro files (binaryFile stream
-    * source underneath; exactly-once per file from the stream log).
+  /** Streaming read over a glob of avro files, exactly-once per file
+    * from the stream's file log. Every trigger lists the whole glob on
+    * the driver ([[DatastreamFileSource]]), starting no Spark job, so a
+    * late file in any folder — `…/09/59/` after `…/10/00/` has opened,
+    * or one a day back — is planned on the next trigger, never lost.
+    * The listing cost grows with the files the glob matches; the
+    * `maxFileAge` bound below keeps the seen-files map, not the
+    * listing, bounded.
     *
     * Zero-length blobs are dropped before decode (see [[read]]).
     *
@@ -135,18 +139,17 @@ object DatastreamAvro {
     *        3-day SLA` prune (DatastreamEventReader.java:471-478).
     *        Deterministic against the file-log: already-committed files
     *        replay idempotently regardless of the bound.
-    * @param maxFileAge    steady-state age bound passed to the file
-    *        stream source (Spark prunes tracked-file state older than
-    *        this relative to the newest seen file) — keeps the
-    *        seen-files map bounded over months of accumulated files
+    * @param maxFileAge    steady-state age bound of the seen-files map
+    *        (files older than this relative to the newest seen file are
+    *        forgotten and never planned) — keeps that map bounded over
+    *        months of accumulated files; Spark's default is 7 days
     */
   def readStream(spark: SparkSession, pathGlob: String,
       schema: StructType,
       pathFilter: Option[org.apache.spark.sql.Column] = None,
       modifiedAfter: Option[java.sql.Timestamp] = None,
       maxFileAge: Option[String] = None): DataFrame = {
-    val reader = spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
+    val reader = spark.readStream.format(classOf[DatastreamFileSource].getName)
     maxFileAge.foreach(a => reader.option("maxFileAge", a))
     val listed = reader.load(pathGlob).filter(col("length") > 0)
     val bounded = modifiedAfter.fold(listed)(t =>

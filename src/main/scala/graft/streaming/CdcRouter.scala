@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.cdc.{CdcTable, Decode, TableAllowlist}
 import graft.sources.DatastreamAvro
-import graft.util.Fs
+import graft.util.{Fs, Persist}
 
 /** Multiplexed multi-table CDC: ONE stream carries every table's
   * change files; each micro-batch routes events to per-table merge
@@ -245,9 +245,10 @@ class CdcRouter(
 
   /** Apply one (possibly multi-table) batch of decoded change events.
     * Direct callers get the same allowlist scope as the stream path.
-    * The batch persists for the scope of the call — it is read once
-    * per distinct table plus once for routing, and upstream is an
-    * Avro decode.
+    * The batch persists for the scope of the call unless the caller
+    * already persisted it — it is read once per distinct table plus
+    * once for routing, and upstream is an Avro decode. An empty batch
+    * commits nothing.
     *
     * Per-table merges run CONCURRENTLY (bounded pool): each targets
     * its own independent bucket dirs, and the merges are small jobs
@@ -258,72 +259,72 @@ class CdcRouter(
     val scoped =
       if (allowlist.allowsAll) events0
       else events0.filter(allowlist.filter(col("schema_name"), col("table_name")))
-    if (consolidated) {
-      // one merge job + ONE CAS per PK-signature group (the common
-      // uniform fleet is one group = one fleet-wide CAS, all-or-
-      // nothing visibility; a mixed fleet gets one consolidated store
-      // per signature — atomic WITHIN each group, the same partial-
-      // failure unit as the grouped partitioned apply, at consolidated
-      // physics). CREATE_DATABASE keys off a store actually holding a
-      // commit, so an empty batch emits nothing — same contract as the
-      // per-table path's names.nonEmpty gate.
-      val events = scoped.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val names = events.select(col("table_name")).distinct()
-          .collect().map(_.getString(0)).sorted
-        val groups = names.toSeq.groupBy(pkColsFor).toSeq
-          .sortBy(_._2.head)
-        groups match {
-          case Seq() => ()
-          case Seq((pk, _)) => // whole batch, no routing filter
-            storeFor(pk).applyBatch(events, batchId); ()
-          case gs =>
-            // disjoint table sets → independent store CASes: overlap them
-            settleAll(4, gs.map { case (pk, g) => () =>
-              storeFor(pk).applyBatch(
-                events.filter(col("table_name").isin(g: _*)), batchId)
-            })
-        }
-        if (names.nonEmpty &&
-          stores.values.exists(_.currentVersion.isDefined))
-          emitCreateDatabaseOnce()
-      } finally { events.unpersist(); () }
-      return
+    Persist.scoped(scoped)(events =>
+      if (consolidated) applyConsolidated(events, batchId)
+      else applyPerTable(events, batchId))
+  }
+
+  /** [[applyBatch]] on the consolidated layout, over a persisted batch. */
+  private def applyConsolidated(events: DataFrame, batchId: Long): Unit = {
+    // one merge job + ONE CAS per PK-signature group (the common
+    // uniform fleet is one group = one fleet-wide CAS, all-or-
+    // nothing visibility; a mixed fleet gets one consolidated store
+    // per signature — atomic WITHIN each group, the same partial-
+    // failure unit as the grouped partitioned apply, at consolidated
+    // physics). CREATE_DATABASE keys off a store actually holding a
+    // commit, so an empty batch emits nothing — same contract as the
+    // per-table path's names.nonEmpty gate.
+    val names = events.select(col("table_name")).distinct()
+      .collect().map(_.getString(0)).sorted
+    val groups = names.toSeq.groupBy(pkColsFor).toSeq
+      .sortBy(_._2.head)
+    groups match {
+      case Seq() => ()
+      case Seq((pk, _)) => // whole batch, no routing filter
+        storeFor(pk).applyBatch(events, batchId); ()
+      case gs =>
+        // disjoint table sets → independent store CASes: overlap them
+        settleAll(4, gs.map { case (pk, g) => () =>
+          storeFor(pk).applyBatch(
+            events.filter(col("table_name").isin(g: _*)), batchId)
+        })
     }
-    val events = scoped.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val names = events.select(col("table_name")).distinct()
-        .collect().map(_.getString(0)).sorted
-      if (names.nonEmpty) emitCreateDatabaseOnce()
-      val (groups, poolNames) =
-        if (names.isEmpty) (Nil, Nil) else planApply(events, names)
-      lastApplyPlan = (groups, poolNames)
-      def applyGroup(g: Seq[String]): Unit = {
-        // the common homogeneous fleet is ONE group == the whole
-        // batch: skip the routing filter so the plan is unchanged
-        val scopedToGroup =
-          if (g.length == names.length) events
-          else events.filter(col("table_name").isin(g: _*))
-        applyBatchPartitioned(scopedToGroup, g, batchId)
-      }
-      if (groups.length == 1) applyGroup(groups.head)
-      else if (groups.nonEmpty)
-        // groups touch DISJOINT table sets, so their single-job
-        // applies are independent — overlap them (each job's wall is
-        // part driver-side commit loop, which would otherwise
-        // serialize)
-        settleAll(4, groups.map(g => () => applyGroup(g)))
-      // Partial-failure replay semantics: the foreachBatch retry
-      // re-applies the batch, and tables that already committed commit
-      // an extra version — final STATE is idempotent via the PK merge
-      // (CdcTable.applyBatch), but per-table version counts may diverge
-      // across a retried batch.
-      settleAll(mergePoolWidth, poolNames.map(name => () =>
-        table(name).applyBatch(
-          events.filter(col("table_name") === name), batchId)))
-    } finally { events.unpersist(); () }
+    if (names.nonEmpty &&
+      stores.values.exists(_.currentVersion.isDefined))
+      emitCreateDatabaseOnce()
+  }
+
+  /** [[applyBatch]] on the per-table layouts, over a persisted batch. */
+  private def applyPerTable(events: DataFrame, batchId: Long): Unit = {
+    val names = events.select(col("table_name")).distinct()
+      .collect().map(_.getString(0)).sorted
+    if (names.nonEmpty) emitCreateDatabaseOnce()
+    val (groups, poolNames) =
+      if (names.isEmpty) (Nil, Nil) else planApply(events, names)
+    lastApplyPlan = (groups, poolNames)
+    def applyGroup(g: Seq[String]): Unit = {
+      // the common homogeneous fleet is ONE group == the whole
+      // batch: skip the routing filter so the plan is unchanged
+      val scopedToGroup =
+        if (g.length == names.length) events
+        else events.filter(col("table_name").isin(g: _*))
+      applyBatchPartitioned(scopedToGroup, g, batchId)
+    }
+    if (groups.length == 1) applyGroup(groups.head)
+    else if (groups.nonEmpty)
+      // groups touch DISJOINT table sets, so their single-job
+      // applies are independent — overlap them (each job's wall is
+      // part driver-side commit loop, which would otherwise
+      // serialize)
+      settleAll(4, groups.map(g => () => applyGroup(g)))
+    // Partial-failure replay semantics: the foreachBatch retry
+    // re-applies the batch, and tables that already committed commit
+    // an extra version — final STATE is idempotent via the PK merge
+    // (CdcTable.applyBatch), but per-table version counts may diverge
+    // across a retried batch.
+    settleAll(mergePoolWidth, poolNames.map(name => () =>
+      table(name).applyBatch(
+        events.filter(col("table_name") === name), batchId)))
   }
 
   /** Run `tasks` on a fixed pool of at most `width` threads and
@@ -604,7 +605,10 @@ class CdcRouter(
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) applyBatch(batch, id)
+        // no emptiness probe: applyBatch persists the batch before its
+        // first action (one decode per batch) and commits nothing for
+        // an empty one
+        applyBatch(batch, id)
         if (consolidated && maintenanceEvery > 0 &&
           (id + 1) % maintenanceEvery == 0) {
           val owns = maintenanceLease.forall { case (lease, me) =>

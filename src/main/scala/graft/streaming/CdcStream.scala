@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.cdc.{CdcTable, Decode}
 import graft.sources.DatastreamAvro
+import graft.util.Persist
 
 /** Structured-Streaming CDC pipeline: avro file stream → decode →
   * per-batch soft-delete merge, with exactly-once per file from the
@@ -66,38 +67,39 @@ object CdcStream {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          // the batch's source files, listed BEFORE the merge consumes
-          // it (bounded by files-per-batch — the reference's TTL task
-          // batches blob updates in hundreds the same way, ":262-277")
-          val batchFiles = processedLog.map(_ =>
-            batch.select(DatastreamAvro.FilePathCol).distinct()
-              .collect().map(_.getString(0)).toSeq)
-          table.applyBatch(batch, id)
-          // mark AFTER the merge commits — the reference stamps
-          // Custom-Time only on offset-commit change (":220-228");
-          // replays re-stamp idempotently (newest stamp wins)
-          processedLog.zip(batchFiles).foreach { case (log, files) =>
-            ProcessedFiles.record(log, files, System.currentTimeMillis())
-          }
-          // periodic in-stream maintenance: the reference runs its
-          // TTL/cleanup task every 3 scan cycles (90 s vs 30 s); here
-          // compaction+vacuum piggyback on every Nth commit. With a
-          // maintenanceLease, only the current lease holder runs it —
-          // the reference's created-flag election around SetTTLTask
-          // (DatastreamEventReader.java:171-173), with failover: a
-          // dead owner's lease expires and a live worker takes over,
-          // instead of maintenance silently stopping forever.
-          if (maintenanceEvery > 0 && (id + 1) % maintenanceEvery == 0) {
-            val owns = maintenanceLease.forall { case (lease, me) =>
-              lease.tryAcquire(me).isDefined
+        // persisted before the first action, so the batch's files are
+        // decoded once: the pass that lists the batch's source files
+        // (bounded by files-per-batch — the reference's TTL task
+        // batches blob updates in hundreds the same way, ":262-277")
+        // fills the cache the merge then reads
+        Persist.scoped[Unit](batch) { events =>
+          val batchFiles = events.select(DatastreamAvro.FilePathCol).distinct()
+            .collect().map(_.getString(0)).toSeq
+          if (batchFiles.nonEmpty) {
+            table.applyBatch(events, id)
+            // mark AFTER the merge commits — the reference stamps
+            // Custom-Time only on offset-commit change (":220-228");
+            // replays re-stamp idempotently (newest stamp wins)
+            processedLog.foreach(
+              ProcessedFiles.record(_, batchFiles, System.currentTimeMillis()))
+            // periodic in-stream maintenance: the reference runs its
+            // TTL/cleanup task every 3 scan cycles (90 s vs 30 s); here
+            // compaction+vacuum piggyback on every Nth commit. With a
+            // maintenanceLease, only the current lease holder runs it —
+            // the reference's created-flag election around SetTTLTask
+            // (DatastreamEventReader.java:171-173), with failover: a
+            // dead owner's lease expires and a live worker takes over,
+            // instead of maintenance silently stopping forever.
+            if (maintenanceEvery > 0 && (id + 1) % maintenanceEvery == 0) {
+              val owns = maintenanceLease.forall { case (lease, me) =>
+                lease.tryAcquire(me).isDefined
+              }
+              if (owns) {
+                table.compact()
+                table.vacuum(keepVersions = 2)
+              }
             }
-            if (owns) {
-              table.compact()
-              table.vacuum(keepVersions = 2)
-            }
           }
-          ()
         }
       }
       .start()

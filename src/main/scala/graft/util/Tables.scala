@@ -3,6 +3,7 @@ package graft.util
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, unix_micros}
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.storage.StorageLevel
 
 /** Loaders for the driver-generated corpus (TESTDATA.md).
   *
@@ -80,6 +81,19 @@ object Cols {
   def big4(c: Column): Column = c.cast(DecimalType(38, 4))
 }
 
+/** Scoped caching of a micro-batch that several actions read. */
+object Persist {
+  /** Run `f` over `df` persisted (memory and disk), unpersisting after —
+    * unless `df` is already persisted, in which case its owner keeps
+    * the cache and unpersists it. */
+  def scoped[T](df: DataFrame)(f: DataFrame => T): T =
+    if (df.storageLevel != StorageLevel.NONE) f(df)
+    else {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      try f(p) finally { p.unpersist(); () }
+    }
+}
+
 /** Scale-dependent streaming knobs, parameterised per the optimization
   * guide's rule that a constant tuned for one deployment must not be
   * baked into the operator: streaming state-store partition counts
@@ -90,21 +104,24 @@ object Cols {
   * not driver core count. The env override leaves the driver's bench
   * (which never sets it) byte-identical. */
 object StreamConf {
+  val StatePartitionsVar = "SPARK_GRAFT_STATE_PARTITIONS"
+
   def statePartitions(default: Int): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.trim)
-      .filter(_.nonEmpty) match {
+    parseStatePartitions(sys.env.get(StatePartitionsVar), default)
+
+  /** `raw` is the variable's value, None when unset. Any set value —
+    * empty or whitespace-only included — must be a positive integer:
+    * fail fast with the variable named, since a malformed value would
+    * otherwise surface as an opaque NumberFormatException, fall back
+    * to the default unnoticed, or pin a broken state layout at the
+    * query's first run. */
+  def parseStatePartitions(raw: Option[String], default: Int): Int =
+    raw.map(_.trim) match {
       case None => default
       case Some(v) =>
-        // fail fast with the variable named: a malformed value would
-        // otherwise surface as an opaque NumberFormatException — or
-        // worse, pin a broken state layout at the query's first run
-        val n = try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, " +
-              s"got '$v'")
-        }
-        require(n > 0,
-          s"SPARK_GRAFT_STATE_PARTITIONS must be > 0, got $n")
+        val n = v.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"$StatePartitionsVar must be a positive integer, got '$v'"))
+        require(n > 0, s"$StatePartitionsVar must be > 0, got $n")
         n
     }
 }

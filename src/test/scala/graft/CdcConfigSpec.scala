@@ -87,4 +87,15 @@ class CdcConfigSpec extends AnyFunSuite {
     assert(ok.copy(columns = Seq("ID", "A", "A")).validate()
       .exists(_.contains("duplicates")))
   }
+
+  test("SPARK_GRAFT_STATE_PARTITIONS: unset takes the default; any set " +
+      "value that is not a positive integer fails and names the variable") {
+    import graft.util.StreamConf.parseStatePartitions
+    assert(parseStatePartitions(None, 4) == 4)
+    assert(parseStatePartitions(Some(" 16 "), 4) == 16)
+    for (bad <- Seq("", "   ", "\t", "x", "1.5", "0", "-2")) {
+      val e = intercept[IllegalArgumentException](parseStatePartitions(Some(bad), 4))
+      assert(e.getMessage.contains("SPARK_GRAFT_STATE_PARTITIONS"), bad)
+    }
+  }
 }

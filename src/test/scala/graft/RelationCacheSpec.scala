@@ -43,4 +43,23 @@ class RelationCacheSpec extends AnyFunSuite {
       assert(CdcTable.relationCacheSessions == Seq(second))
     } finally second.stop()
   }
+
+  test("a dir the driver cannot stat is read fresh, not memoized") {
+    val spark = session()
+    try {
+      var reads = 0
+      def read(paths: Seq[String]): Unit = {
+        CdcTable.cachedRead(spark, paths) { reads += 1; spark.range(1).toDF() }
+        ()
+      }
+      // a URI-schemed path is not a local file name: no mtime to key on
+      val unstatable = Seq("file:/no/such/bucket-0")
+      read(unstatable); read(unstatable)
+      assert(reads == 2)
+      assert(!CdcTable.relationCacheSessions.contains(spark))
+      val dir = Files.createTempDirectory(Paths.get("target"), "relcache-stat")
+      read(Seq(dir.toString)); read(Seq(dir.toString))
+      assert(reads == 3)
+    } finally spark.stop()
+  }
 }

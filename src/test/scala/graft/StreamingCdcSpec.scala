@@ -382,4 +382,79 @@ class StreamingCdcSpec extends AnyFunSuite {
     drain()
     assert(seen.toSeq == Seq(2L))
   }
+
+  /** The stream's file log in `ckpt`: source file name → the log
+    * batches it was planned in. */
+  private def plannedIn(ckpt: String): Map[String, Seq[Long]] = {
+    val log = new org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceLog(
+      org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceLog.VERSION,
+      spark, s"$ckpt/sources/0")
+    log.get(None, None).toSeq.flatMap(_._2)
+      .map(e => e.path.substring(e.path.lastIndexOf('/') + 1) -> e.batchId)
+      .groupMap(_._1)(_._2)
+  }
+
+  test("restart, then late files behind the checkpoint's newest folder: " +
+      "every file is applied, each planned exactly once") {
+    val root = Files.createTempDirectory(Paths.get("target"), "cdc-window")
+    val src = root.resolve("in")
+    val ckpt = root.resolve("ckpt").toString
+    // Datastream's layout: <table>/yyyy/MM/dd/HH/mm/<file>
+    def drop(fixture: String, minute: String, as: String): Unit = {
+      val d = src.resolve("HR_EMPLOYEES").resolve(minute)
+      Files.createDirectories(d)
+      Files.copy(Paths.get(s"$fixtures/$fixture"), d.resolve(as))
+      ()
+    }
+    val glob = s"$src/*/*/*/*/*/*/*.avro"
+    val schema = DatastreamAvro.sparkSchema(s"$fixtures/dump.avro")
+    val table = new CdcTable(spark, root.resolve("table").toString,
+      Seq("EMPLOYEE_ID"))
+    drop("dump.avro", "2026/10/19/09/58", "s1_oracle-backfill_0_0.avro")
+    drop("insert.avro", "2026/10/19/10/00", "s1_oracle-cdc-logminer_0_1.avro")
+    CdcStream.drain(CdcStream.start(spark, glob, schema, table, ckpt))
+    assert(table.state.get.count() == 109)
+    // the checkpoint's newest folder is 10/00; a late file lands behind
+    // it, under the previous hour, and newer files after it
+    drop("update.avro", "2026/10/19/09/59", "s1_oracle-cdc-logminer_0_2.avro")
+    drop("update-pk.avro", "2026/10/19/10/01", "s1_oracle-cdc-logminer_0_3.avro")
+    drop("delete.avro", "2026/10/19/10/01", "s1_oracle-cdc-logminer_0_4.avro")
+    CdcStream.drain(CdcStream.start(spark, glob, schema, table, ckpt))
+    val st = table.state.get.collect()
+      .map(r => r.getAs[Long]("EMPLOYEE_ID") -> r).toMap
+    assert(st(210L).getAs[Boolean]("_is_deleted"))
+    assert(!st(211L).getAs[Boolean]("_is_deleted"))
+    assert(st(211L).getAs[java.math.BigDecimal]("SALARY")
+      .compareTo(new java.math.BigDecimal("12131.00")) == 0)
+    assert(table.state.get.count() == 110)
+    val planned = plannedIn(ckpt)
+    assert(planned.size == 5 && planned.values.forall(_.size == 1))
+  }
+
+  test("a micro-batch decodes its files once: numInputRows is the file " +
+      "count on CdcStream (with processedLog) and on CdcRouter") {
+    import graft.streaming.CdcRouter
+    val root = Files.createTempDirectory(Paths.get("target"), "cdc-once")
+    val src = root.resolve("in"); Files.createDirectories(src)
+    Seq("dump.avro", "insert.avro", "update.avro", "delete.avro").zipWithIndex
+      .foreach { case (f, i) =>
+        Files.copy(Paths.get(s"$fixtures/$f"), src.resolve(s"s1_oracle-cdc-logminer_0_$i.avro"))
+      }
+    val glob = s"$src/*.avro"
+    val schema = DatastreamAvro.sparkSchema(s"$fixtures/dump.avro")
+    val p = CdcStream.start(spark, glob, schema,
+      new CdcTable(spark, root.resolve("table").toString, Seq("EMPLOYEE_ID")),
+      root.resolve("ckpt").toString,
+      processedLog = Some(root.resolve("processed.log").toString))
+    CdcStream.drain(p)
+    val streamRows = p.query.recentProgress.map(_.numInputRows).toSeq
+    assert(streamRows.sum == 4, streamRows)
+    val r = new CdcRouter(spark, root.resolve("store").toString,
+      _ => Seq("EMPLOYEE_ID"), numBuckets = 2, consolidated = true)
+    val q = r.start(glob, schema, root.resolve("ckpt-router").toString)
+    q.processAllAvailable(); q.stop(); q.awaitTermination()
+    val routerRows = q.recentProgress.map(_.numInputRows).toSeq
+    assert(routerRows.sum == 4, routerRows)
+    assert(r.store.state("EMPLOYEES").get.count() == 109)
+  }
 }
