@@ -44,9 +44,9 @@ object Apply {
   def collapse(events: DataFrame, pkCols: Seq[String]): DataFrame =
     collapseBy(events, pkCols.map(pkCol))
 
-  /** [[collapse]] with explicit key columns — the router's
-    * partitioned apply collapses a MULTI-table batch in one aggregate
-    * by prepending the table discriminator to the PK keys. */
+  /** [[collapse]] with explicit key columns — [[mergeMulti]]
+    * collapses a MULTI-table batch in one aggregate by prepending the
+    * table discriminator to the PK keys. */
   private[graft] def collapseBy(events: DataFrame,
       keys: Seq[Column]): DataFrame = {
     val all = events.columns.toSeq
@@ -160,16 +160,13 @@ object Apply {
       cols.map(c => when(eWins, col(s"e.$c")).otherwise(col(s"s.$c")).as(c)): _*)
   }
 
-  /** Multi-table [[merge]] for the router's single-job partitioned
-    * apply: `state` and the collapsed events both carry a top-level
-    * table discriminator (`tblCol`), and collapse + the full-outer
-    * merge key on (table, pk…) — one aggregate and ONE shuffle join
-    * for a batch spanning hundreds of tables, instead of one Spark
-    * job per table. Precondition (router-enforced, checked against
-    * each table's committed `_schema.json`): every routed table's
-    * payload schema equals the incoming batch payload — the
-    * heterogeneous/drift cases stay on the per-table [[merge]] path,
-    * which owns schema alignment. */
+  /** Multi-table [[merge]] for [[ConsolidatedStore]]: `state` and the
+    * collapsed events both carry a top-level table discriminator
+    * (`tblCol`), and collapse + the full-outer merge key on
+    * (table, pk…) — one aggregate and ONE shuffle join for a batch
+    * spanning hundreds of tables, instead of one Spark job per table.
+    * Precondition (the store reads `state` under its widened fleet
+    * schema): `state` holds every column of the incoming events. */
   private[graft] def mergeMulti(state: Option[DataFrame],
       events: DataFrame, tblCol: String, pkCols: Seq[String],
       sequenceNum: Long): DataFrame = {

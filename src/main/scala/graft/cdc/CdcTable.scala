@@ -121,7 +121,7 @@ class CdcTable(
     * resolving, which keeps vacuum semantics intact. */
   private val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[Long, Map[Int, String]]()
-  private def manifest(v: Long): Map[Int, String] =
+  private[graft] def manifest(v: Long): Map[Int, String] =
     manifestCache.computeIfAbsent(v, _ => {
       val txt = new String(Files.readAllBytes(dir.resolve(s"manifest-$v.json")))
       // minimal parser for the {"0":"b0-v1",...} shape we write
@@ -173,54 +173,6 @@ class CdcTable(
         new String(Files.readAllBytes(schemaFile))).asInstanceOf[StructType])
     else state.map(df => StructType(
       df.schema.fields.filterNot(f => Apply.MetaCols.contains(f.name))))
-
-  /** Persist `_schema.json` for a legacy table that predates it: one
-    * mergeSchema bucket scan NOW so every later read is the one small
-    * file the drift check is documented to cost. The per-table apply
-    * path self-heals this inline; the router's partitioned-apply
-    * eligibility check calls this so a legacy table doesn't re-pay
-    * the scan every micro-batch forever. */
-  private[graft] def ensureSchemaFile(): Unit =
-    if (currentVersion.isDefined && !Files.exists(schemaFile))
-      payloadSchema.foreach(writeSchemaFile)
-
-  /** The version AND its bucket map, read together — the router's
-    * partitioned-apply path resolves every table's touched buckets
-    * from this and passes the version back to [[commitStaged]] as
-    * the optimistic-concurrency base (a committed version's manifest
-    * is immutable, so the pair read is race-free). */
-  private[graft] def versionedBucketDirs: (Option[Long], Map[Int, String]) = {
-    val cur = currentVersion
-    (cur, cur.map(manifest).getOrElse(Map.empty))
-  }
-
-  /** Commit bucket dirs STAGED BY AN EXTERNAL WRITER (the router's
-    * single-job partitioned apply, which merges hundreds of tables'
-    * buckets in one Spark job and then commits each table with pure
-    * driver-side renames). `basedOn` is the version whose state the
-    * staged merge READ (from [[versionedBucketDirs]]): the commit
-    * publishes at basedOn+1 through the same CAS-guarded
-    * [[publishAndCommit]] as the in-table path, so a writer that
-    * committed in between makes THIS commit fail with a retryable
-    * conflict instead of being silently merged over — recomputing
-    * the version here at commit time would defeat the optimistic
-    * concurrency the staged merge depends on. First commit records
-    * CREATE_TABLE + the payload schema exactly like [[applyBatch]];
-    * drift never reaches this path (the router falls back to
-    * per-table applyBatch when the incoming payload differs from the
-    * committed one). Returns the committed version. */
-  private[graft] def commitStaged(staged: Seq[(Int, Path)],
-      incomingPayload: StructType, basedOn: Option[Long]): Long = {
-    val cur = basedOn
-    val curManifest = cur.map(manifest).getOrElse(Map.empty)
-    val next = cur.getOrElse(-1L) + 1
-    publishAndCommit(next, curManifest, staged)
-    if (cur.isEmpty) {
-      Fs.appendLines(ddlFile, Seq(createTableDdl(next, incomingPayload)))
-      writeSchemaFile(incomingPayload)
-    }
-    next
-  }
 
   /** Merge one micro-batch of decoded change events; rewrites only the
     * PK buckets present in the batch. Returns the committed version.
@@ -789,7 +741,7 @@ class CdcTable(
   def sweepStaging(maxAgeMs: Long = 60L * 60 * 1000): Seq[String] = {
     val cutoff = System.currentTimeMillis() - maxAgeMs
     // the vanished-entry-means-activity recursion lives in
-    // graft.util.Fs.newestMtime, shared with the router-root sweep
+    // graft.util.Fs.newestMtime, shared with ConsolidatedStore.vacuum
     def uncommittedBucketDir(name: String): Boolean = name match {
       case BucketDirName(_, v) =>
         !Files.exists(dir.resolve(s"manifest-$v.json"))

@@ -226,7 +226,16 @@ class ConsolidatedStore(
           StructField("_sort_key", sortKeyType),
           StructField("_bucket", org.apache.spark.sql.types.IntegerType))))
 
-  private val NameRe = "[A-Za-z0-9_.-]+"
+  /** Table names are manifest keys (`<table>/<bucket>=<segment>`,
+    * parsed at the LAST `=` and the last `/` before it, so both may
+    * appear in a name), JSON strings in `_ddl.jsonl` (unescaped) and
+    * data values in segments — never paths. Only what those encodings
+    * cannot carry is refused: an empty name, a control character
+    * (one manifest entry per line), `"` or `\`. All-dot names stay
+    * refused: they are path components, never table names. */
+  private def storableName(n: String): Boolean =
+    n.nonEmpty && !n.forall(_ == '.') &&
+      !n.exists(c => c.isControl || c == '"' || c == '\\')
 
   /** Merge one multi-table micro-batch and commit the WHOLE fleet in
     * one CAS. Input shape is [[Decode]]'s multiplexed form:
@@ -261,14 +270,15 @@ class ConsolidatedStore(
     if (touched.isEmpty) return cur.map(_.version).getOrElse(-1L)
     val names = touched.map(_._1).distinct.sorted.toSeq
     names.foreach { n =>
-      require(n.matches(NameRe) && !n.forall(_ == '.'),
-        s"consolidated store: table name '$n' outside the identifier " +
-          "charset (names are manifest keys and data values here)")
+      require(storableName(n),
+        s"consolidated store: table name '$n' is empty, all dots, or " +
+          "holds a control character, '\"' or '\\' (names are " +
+          "manifest keys and DDL strings here)")
       require(pkColsFor(n) == pk,
         s"consolidated store: table '$n' declares pk ${pkColsFor(n)}, " +
-          s"fleet pk is $pk — ONE store holds one PK shape (CdcRouter's " +
-          "consolidated mode routes mixed fleets into one store per " +
-          "PK-signature group automatically)")
+          s"fleet pk is $pk — ONE store holds one PK shape (CdcRouter " +
+          "routes mixed fleets into one store per PK-signature group " +
+          "automatically)")
     }
 
     // widen-only drift, fleet-wide: validates via SchemaDrift (a type

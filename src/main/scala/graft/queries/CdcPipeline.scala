@@ -44,8 +44,6 @@ object CdcPipeline {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   private val jsonFixtureCache =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-  private val routerCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, graft.streaming.CdcRouter]()
   private val consolidatedCache = new java.util.concurrent.ConcurrentHashMap[
     SparkSession, graft.cdc.ConsolidatedStore]()
   private def replayedTable(s: SparkSession): CdcTable = {
@@ -128,36 +126,10 @@ object CdcPipeline {
     // the multiplexed router path under the oracle gate: one event
     // stream split across two tables by a per-event table key, full
     // replay (snapshot + CDC + PK-update + delete), both tables'
-    // final states dumped with their table tag
-    "c09_router_multiplex" -> { (s, _) =>
-      import s.implicits._
-      // same once-per-session discipline as replayedTable (see the
-      // replayCache note): the multiplexed replay commits once, the
-      // oracle gates both tables' final states on every run
-      val router = routerCache.computeIfAbsent(s, _ => {
-        val dir = java.nio.file.Files.createTempDirectory("graft-router")
-        val r = new graft.streaming.CdcRouter(s, dir.toString,
-          _ => Seq("EMPLOYEE_ID"), numBuckets = 4, databaseName = "xe")
-        replayFiles.zipWithIndex.foreach {
-          case (f, i) =>
-            val e = Decode.fromAvro(s, s"$fixtures/$f")
-              .withColumn("table_name",
-                when($"row.EMPLOYEE_ID" % 2 === 0, "EMP_EVEN")
-                  .otherwise("EMP_ODD"))
-            r.applyBatch(e, i.toLong)
-        }
-        r
-      })
-      router.knownTables.map { t =>
-        router.table(t).state.get.select(
-          lit(t).as("table_name"),
-          $"EMPLOYEE_ID".as("employee_id"),
-          $"FIRST_NAME".as("first_name"),
-          $"SALARY".cast("double").as("salary"),
-          $"_is_deleted".as("deleted"))
-      }.reduce(_.unionByName(_))
-        .orderBy($"table_name", $"employee_id")
-    },
+    // final states dumped with their table tag. The replay is the
+    // shared once-per-session consolidated fixture c25/c26 also read
+    // (see the replayCache note)
+    "c09_router_multiplex" -> { (s, _) => fleetFinalState(s) },
 
     // time travel: the state as of version 2 (dump + insert + update
     // applied; PK-update and delete not yet) — one manifest resolve,
@@ -500,24 +472,11 @@ object CdcPipeline {
         .orderBy($"file")
     },
 
-    // the consolidated bucket store (ConsolidatedStore.scala): the
-    // SAME multiplexed replay as c09, but merged into segment files
-    // shared by both tables and committed with ONE fleet-wide CAS per
-    // batch — the 2,048+-table layout. The oracle is c09's golden
-    // final state verbatim: identical semantics, different physics.
-    "c25_consolidated_fleet" -> { (s, _) =>
-      import s.implicits._
-      val store = consolidatedStore(s)
-      store.knownTables.map { t =>
-        store.state(t).get.select(
-          lit(t).as("table_name"),
-          $"EMPLOYEE_ID".as("employee_id"),
-          $"FIRST_NAME".as("first_name"),
-          $"SALARY".cast("double").as("salary"),
-          $"_is_deleted".as("deleted"))
-      }.reduce(_.unionByName(_))
-        .orderBy($"table_name", $"employee_id")
-    },
+    // the consolidated bucket store (ConsolidatedStore.scala) the
+    // router merges into: segment files shared by both tables, ONE
+    // fleet-wide CAS per batch — the 2,048+-table layout. The oracle
+    // is c09's golden final state verbatim.
+    "c25_consolidated_fleet" -> { (s, _) => fleetFinalState(s) },
 
     // ...and the store's SECOND IVM contract driver-gated (c25 gates
     // final state): the per-table post-image change feed at commit 3
@@ -730,18 +689,18 @@ object CdcPipeline {
     }
   )
 
-  /** One consolidated-fleet replay per session (the c25/c26 shared
-    * fixture): c09's multiplexed replay merged through the
-    * consolidated layout — segment files shared by both tables, ONE
-    * fleet-wide CAS per batch (the 2,048+-table physics). */
+  /** One multiplexed fleet replay per session (the c09/c25/c26
+    * shared fixture): the fixtures split across EMP_EVEN/EMP_ODD and
+    * routed into the consolidated layout — segment files shared by
+    * both tables, ONE fleet-wide CAS per batch (the 2,048+-table
+    * physics). */
   private def consolidatedStore(s: SparkSession)
       : graft.cdc.ConsolidatedStore =
     consolidatedCache.computeIfAbsent(s, _ => {
       import s.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft-cstore")
       val r = new graft.streaming.CdcRouter(s, dir.toString,
-        _ => Seq("EMPLOYEE_ID"), numBuckets = 4, databaseName = "xe",
-        consolidated = true)
+        _ => Seq("EMPLOYEE_ID"), numBuckets = 4, databaseName = "xe")
       replayFiles.zipWithIndex.foreach {
         case (f, i) =>
           val e = Decode.fromAvro(s, s"$fixtures/$f")
@@ -752,6 +711,21 @@ object CdcPipeline {
       }
       r.store
     })
+
+  /** Both fleet tables' final states, tagged with the table name. */
+  private def fleetFinalState(s: SparkSession): DataFrame = {
+    import s.implicits._
+    val store = consolidatedStore(s)
+    store.knownTables.map { t =>
+      store.state(t).get.select(
+        lit(t).as("table_name"),
+        $"EMPLOYEE_ID".as("employee_id"),
+        $"FIRST_NAME".as("first_name"),
+        $"SALARY".cast("double").as("salary"),
+        $"_is_deleted".as("deleted"))
+    }.reduce(_.unionByName(_))
+      .orderBy($"table_name", $"employee_id")
+  }
 
   val oracle: Map[String, String] = Map(
     // positions are decode-time facts of the FIXED fixture files

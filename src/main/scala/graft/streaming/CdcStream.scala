@@ -142,8 +142,12 @@ object CdcStream {
       .contains("backfill")
     val dump = DatastreamAvro.read(spark, sourceGlob, Some(schema),
       pathFilter = Some(isDump))
-    val dumpEvents = Decode.changeEvents(dump, decodeOpts)
-    if (!dumpEvents.isEmpty) { table.applyBatch(dumpEvents, -1L); () }
+    // the emptiness probe and the apply read ONE persisted decode: an
+    // empty dump must not commit a version, and the probe alone
+    // would otherwise decode the dump a second time
+    Persist.scoped(Decode.changeEvents(dump, decodeOpts)) { events =>
+      if (!events.isEmpty) { table.applyBatch(events, -1L); () }
+    }
     start(spark, sourceGlob, schema, table, checkpoint, decodeOpts,
       trigger, pathFilter = Some(!isDump))
   }

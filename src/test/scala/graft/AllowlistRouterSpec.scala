@@ -76,8 +76,9 @@ class AllowlistRouterSpec extends AnyFunSuite {
     assert(dbLog.head.contains("\"xe\""))
 
     val tableName = events.select("table_name").head.getString(0)
-    val tableLog0 = router.table(tableName).ddlEvents
-    assert(tableLog0.size == 1 && tableLog0.head.contains("CREATE_TABLE"))
+    val tableLog0 = router.store.ddlEvents
+    assert(tableLog0.size == 1 && tableLog0.head.contains("CREATE_TABLE") &&
+      tableLog0.head.contains(s""""table": "$tableName""""), tableLog0)
 
     // drift: second batch with an extra payload column → ALTER_TABLE,
     // while the database-level event is NOT re-emitted
@@ -86,7 +87,7 @@ class AllowlistRouterSpec extends AnyFunSuite {
         col("row.*"), org.apache.spark.sql.functions.lit(1L).as("NEW_COL")))
     router.applyBatch(drifted, 1L)
     assert(router.databaseDdlEvents.size == 1)
-    val tableLog = router.table(tableName).ddlEvents
+    val tableLog = router.store.ddlEvents
     assert(tableLog.size == 2 && tableLog(1).contains("ALTER_TABLE"), tableLog)
     assert(tableLog(1).contains("NEW_COL"))
   }
@@ -165,7 +166,7 @@ class AllowlistRouterSpec extends AnyFunSuite {
     qb.stop(); qb.awaitTermination()
 
     def state(r: CdcRouter, t: String): Seq[String] =
-      r.table(t).state.get
+      r.stateOf(t).get
         .select(col("EMPLOYEE_ID"), col("FIRST_NAME"), col("SALARY"),
           col("_is_deleted"))
         .collect().map(_.toSeq.toString).sorted.toSeq

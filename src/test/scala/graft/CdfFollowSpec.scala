@@ -213,8 +213,7 @@ class CdfFollowSpec extends AnyFunSuite {
     val root = freshDir("cdf-mixed")
     val pkFor: String => Seq[String] =
       n => if (n.startsWith("a")) Seq("id") else Seq("id", "val")
-    val router = new CdcRouter(spark, root, pkFor, numBuckets = 2,
-      consolidated = true)
+    val router = new CdcRouter(spark, root, pkFor, numBuckets = 2)
     val tables = Seq("a0", "a1", "b0", "b1")
     router.applyBatch(batch(tables, Seq(0L, 1L, 2L), "INSERT", 0L), 0L)
     router.applyBatch(batch(tables, Seq(1L), "DELETE", 1L), 1L)

@@ -6,18 +6,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.cdc.{Apply, ConcurrentCommitException, ConsolidatedStore}
+import graft.cdc.{Apply, CdcTable, ConcurrentCommitException, ConsolidatedStore}
 import graft.streaming.CdcRouter
 
 /** The consolidated bucket store — many tables per physical segment
   * file, ONE fleet-wide CAS per micro-batch. Semantics are pinned
-  * against the per-table pool path (same batches, state must be
-  * identical table-for-table); the claims unique to this layout get
-  * their own legs: file count per batch is O(shuffle partitions) not
-  * O(tables), the commit is all-or-nothing across the whole fleet
-  * (crash injection), losers of the commit CAS surface as retryable
-  * conflicts with their segments cleaned up, widen-only drift applies
-  * fleet-wide with old segments null-filling. */
+  * against a per-table reference — every table merged into its own
+  * CdcTable, the per-table merge the router's retired pool path ran
+  * (same batches, state must be identical table-for-table); the
+  * claims unique to this layout get their own legs: file count per
+  * batch is O(shuffle partitions) not O(tables), the commit is
+  * all-or-nothing across the whole fleet (crash injection), losers of
+  * the commit CAS surface as retryable conflicts with their segments
+  * cleaned up, widen-only drift applies fleet-wide with old segments
+  * null-filling. */
 class ConsolidatedStoreSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -57,6 +59,20 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
   private def freshDir(tag: String): String =
     Files.createTempDirectory(Paths.get("target"), tag).toString
 
+  /** The per-table reference: each table of a batch merged into its
+    * own [[CdcTable]] under `root/<table>` — the per-table merge the
+    * router's retired pool path ran. */
+  private class PerTableRef(tag: String, pkFor: String => Seq[String],
+      numBuckets: Int) {
+    private val root = freshDir(tag)
+    def table(n: String): CdcTable =
+      new CdcTable(spark, s"$root/$n", pkFor(n), numBuckets)
+    def applyBatch(events: DataFrame, batchId: Long): Unit =
+      events.select("table_name").distinct().collect().map(_.getString(0))
+        .sorted.foreach(n => table(n).applyBatch(
+          events.filter(col("table_name") === n), batchId))
+  }
+
   private def rows(df: DataFrame): Seq[(Long, String, Boolean)] = {
     import spark.implicits._
     df.select($"id", $"val", $"_is_deleted")
@@ -68,12 +84,11 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       "O(shuffle-partitions) files, not O(tables)") {
     val nT = 12
     val cons = new CdcRouter(spark, freshDir("cstore-eq"), _ => Seq("id"),
-      numBuckets = 2, consolidated = true)
-    val pool = new CdcRouter(spark, freshDir("cstore-pool"), _ => Seq("id"),
-      numBuckets = 2, partitionedApplyMinTables = Int.MaxValue)
-    for (r <- Seq(cons, pool)) {
-      r.applyBatch(inserts(nT, 5, 0L), 0L)
-      r.applyBatch(mutations(nT, 1L), 1L)
+      numBuckets = 2)
+    val pool = new PerTableRef("cstore-pool", _ => Seq("id"), numBuckets = 2)
+    for (apply <- Seq[(DataFrame, Long) => Unit](cons.applyBatch, pool.applyBatch)) {
+      apply(inserts(nT, 5, 0L), 0L)
+      apply(mutations(nT, 1L), 1L)
     }
     for (i <- 0 until nT) {
       val n = s"t$i"
@@ -115,12 +130,11 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       n => if (n.drop(1).toInt % 2 == 0) Seq("id") else Seq("id", "val")
     val consRoot = freshDir("cstore-mixed")
     val cons = new CdcRouter(spark, consRoot, pkFor,
-      numBuckets = 2, consolidated = true)
-    val pool = new CdcRouter(spark, freshDir("cstore-mixedpool"), pkFor,
-      numBuckets = 2, partitionedApplyMinTables = Int.MaxValue)
-    for (r <- Seq(cons, pool)) {
-      r.applyBatch(inserts(nT, 5, 0L), 0L)
-      r.applyBatch(mutations(nT, 1L), 1L)
+      numBuckets = 2)
+    val pool = new PerTableRef("cstore-mixedpool", pkFor, numBuckets = 2)
+    for (apply <- Seq[(DataFrame, Long) => Unit](cons.applyBatch, pool.applyBatch)) {
+      apply(inserts(nT, 5, 0L), 0L)
+      apply(mutations(nT, 1L), 1L)
     }
     // two signature groups → two stores, each on its own CAS chain
     // (the composition the round-12 verdict asked for: heterogeneous
@@ -142,7 +156,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     // a RESTARTED router (fresh instance, same root) discovers both
     // stores from disk and keeps merging on the same chains
     val reopened = new CdcRouter(spark, consRoot, pkFor,
-      numBuckets = 2, consolidated = true)
+      numBuckets = 2)
     assert(reopened.allStores.size == 2)
     reopened.applyBatch(mutations(nT, 2L), 2L) // replay: idempotent
     for (i <- 0 until nT)
@@ -159,10 +173,11 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     val pkFor: String => Seq[String] =
       n => if (n.drop(1).toInt % 2 == 0) Seq("id") else Seq("id", "val")
     val r = new CdcRouter(spark, freshDir("cstore-mixed-crash"), pkFor,
-      numBuckets = 2, consolidated = true)
-    val pool = new CdcRouter(spark, freshDir("cstore-mixed-crash-pool"),
-      pkFor, numBuckets = 2, partitionedApplyMinTables = Int.MaxValue)
-    for (rt <- Seq(r, pool)) rt.applyBatch(inserts(nT, 4, 0L), 0L)
+      numBuckets = 2)
+    val pool = new PerTableRef("cstore-mixed-crash-pool", pkFor,
+      numBuckets = 2)
+    r.applyBatch(inserts(nT, 4, 0L), 0L)
+    pool.applyBatch(inserts(nT, 4, 0L), 0L)
     // crash ONE group's commit; the sibling group settles first
     // (settle-all discipline) and its CAS stands
     r.storeFor(Seq("id")).beforeCommitHook =
@@ -193,7 +208,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       _ => Seq("id"), numBuckets = 2)
     legacy.applyBatch(inserts(4, 3, 0L), 0L)
     val r = new CdcRouter(spark, root, _ => Seq("id"),
-      numBuckets = 2, consolidated = true)
+      numBuckets = 2)
     assert(r.store.location.endsWith("/_store"),
       s"legacy dir not claimed: ${r.store.location}")
     r.applyBatch(mutations(4, 1L), 1L)
@@ -217,7 +232,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       _ => Seq("id"), numBuckets = 2)
     grouped.applyBatch(inserts(2, 3, 0L), 0L)
     val r = new CdcRouter(spark, root, _ => Seq("id"),
-      numBuckets = 2, consolidated = true)
+      numBuckets = 2)
     val e = intercept[IllegalArgumentException](r.allStores)
     assert(e.getMessage.contains("split across two dirs"),
       s"unexpected message: ${e.getMessage}")
@@ -241,8 +256,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     // the old writer created the dir but crashed before its first
     // commit: no manifest, so pkSignature discovery cannot rebind it
     Files.createDirectories(Paths.get(root, legacy))
-    val r = new CdcRouter(spark, root, _ => pk, numBuckets = 2,
-      consolidated = true)
+    val r = new CdcRouter(spark, root, _ => pk, numBuckets = 2)
     assert(r.storeFor(pk).location == s"$root/$legacy",
       s"minted a second dir beside '$legacy'")
     // a signature with NO legacy dir on disk gets the 10-byte name
@@ -278,8 +292,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
   }
 
   test("at-least-once replay is idempotent on final state") {
-    val r = new CdcRouter(spark, freshDir("cstore-replay"), _ => Seq("id"),
-      consolidated = true)
+    val r = new CdcRouter(spark, freshDir("cstore-replay"), _ => Seq("id"))
     r.applyBatch(inserts(8, 4, 0L), 0L)
     r.applyBatch(mutations(8, 1L), 1L)
     val before = (0 until 8).map(i => rows(r.store.state(s"t$i").get))
@@ -291,8 +304,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
   test("the fleet commit is ALL-OR-NOTHING: a crash after the segment " +
       "publish but before the CAS leaves every table at the previous " +
       "version; the retry lands atomically") {
-    val r = new CdcRouter(spark, freshDir("cstore-atomic"), _ => Seq("id"),
-      consolidated = true)
+    val r = new CdcRouter(spark, freshDir("cstore-atomic"), _ => Seq("id"))
     r.applyBatch(inserts(10, 3, 0L), 0L)
     val v0 = r.store.currentVersion
     val before = (0 until 10).map(i => rows(r.store.state(s"t$i").get))
@@ -342,8 +354,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
   test("widen-only drift applies fleet-wide (old segments null-fill); " +
       "non-widening drift refuses") {
     import spark.implicits._
-    val r = new CdcRouter(spark, freshDir("cstore-drift"), _ => Seq("id"),
-      consolidated = true)
+    val r = new CdcRouter(spark, freshDir("cstore-drift"), _ => Seq("id"))
     r.applyBatch(inserts(6, 3, 0L), 0L)
     val widened = spark.range(6L)
       .select(concat(lit("t"), $"id").as("table_name"),
@@ -373,10 +384,62 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](s.applyBatch(inserts(4, 2, 0L), 0L))
     val s2 = new ConsolidatedStore(spark, freshDir("cstore-name"),
       _ => Seq("id"))
-    val bad = spark.range(1).select(lit("..").as("table_name"),
-      struct(lit(0L).as("id"), lit("x").as("val")).as("row"),
-      lit("INSERT").as("op"), key(0L))
-    intercept[IllegalArgumentException](s2.applyBatch(bad, 0L))
+    // names the manifest lines and the DDL JSON cannot carry, and
+    // all-dot names
+    for (name <- Seq(".", "..", "", "a\nb", "a\"b", "a\\b")) {
+      val bad = spark.range(1).select(lit(name).as("table_name"),
+        struct(lit(0L).as("id"), lit("x").as("val")).as("row"),
+        lit("INSERT").as("op"), key(0L))
+      intercept[IllegalArgumentException](s2.applyBatch(bad, 0L))
+    }
+    assert(s2.currentVersion.isEmpty)
+  }
+
+  test("table names the store's encodings carry land, wherever they " +
+      "would escape a path: s:t=1 lands 4 rows through stateOf") {
+    import spark.implicits._
+    val root = freshDir("cstore-exotic")
+    val r = new CdcRouter(spark, root, _ => Seq("id"), numBuckets = 2)
+    // `=` and `/` sit inside the manifest key grammar
+    // (`<table>/<bucket>=<segment>`), which parses at the last of each
+    def exotic(ev: DataFrame): DataFrame = ev.withColumn("table_name",
+      when($"table_name" === "t1", lit("s:t=1"))
+        .when($"table_name" === "t2", lit("a/../../x"))
+        .otherwise($"table_name"))
+    r.applyBatch(exotic(inserts(3, 4, seq = 0L)), 0L)
+    assert(r.knownTables == Seq("a/../../x", "s:t=1", "t0"))
+    for (n <- r.knownTables) assert(r.stateOf(n).get.count() == 4, n)
+    // a second commit and a restarted router resolve the same keys
+    r.applyBatch(exotic(mutations(3, 1L)), 1L)
+    val reopened = new CdcRouter(spark, root, _ => Seq("id"), numBuckets = 2)
+    for (n <- r.knownTables)
+      assert(rows(reopened.stateOf(n).get).find(_._1 == 0L)
+        .exists(_._2 == "updated"), n)
+  }
+
+  test("a root holding per-table CdcTable state (the retired per-table " +
+      "router layout) is refused, naming the table dir") {
+    val root = freshDir("cstore-oldroot")
+    // a committed per-table dir, as the pool path left it
+    new CdcTable(spark, s"$root/t0", Seq("id"), 2)
+      .applyBatch(inserts(1, 3, 0L), 0L)
+    val e = intercept[IllegalArgumentException](
+      new CdcRouter(spark, root, _ => Seq("id")))
+    assert(e.getMessage.contains(Paths.get(root, "t0").toString), e.getMessage)
+    // the v0 window (manifest published, `_LATEST` not yet) is state too
+    val root2 = freshDir("cstore-oldroot0")
+    Files.createDirectories(Paths.get(root2, "t1"))
+    Files.write(Paths.get(root2, "t1", "manifest-0.json"), "{}".getBytes)
+    val e2 = intercept[IllegalArgumentException](
+      new CdcRouter(spark, root2, _ => Seq("id")))
+    assert(e2.getMessage.contains(Paths.get(root2, "t1").toString))
+    // stores, the database DDL log and stateless dirs open as before
+    val ok = freshDir("cstore-newroot")
+    val r = new CdcRouter(spark, ok, _ => Seq("id"), numBuckets = 2)
+    r.applyBatch(inserts(2, 2, 0L), 0L)
+    Files.createDirectories(Paths.get(ok, "scratch"))
+    assert(new CdcRouter(spark, ok, _ => Seq("id"), numBuckets = 2)
+      .knownTables == Seq("t0", "t1"))
   }
 
   test("randomized batch sequences: consolidated ≡ pool state after " +
@@ -385,9 +448,8 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     import spark.implicits._
     val nT = 8
     val cons = new CdcRouter(spark, freshDir("cstore-rand"), _ => Seq("id"),
-      numBuckets = 2, consolidated = true)
-    val pool = new CdcRouter(spark, freshDir("cstore-randp"), _ => Seq("id"),
-      numBuckets = 2, partitionedApplyMinTables = Int.MaxValue)
+      numBuckets = 2)
+    val pool = new PerTableRef("cstore-randp", _ => Seq("id"), numBuckets = 2)
     // deterministic LCG (no Random — reproducible)
     var st = 987654321L
     def next(n: Int): Int = {
@@ -436,9 +498,8 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     import spark.implicits._
     val nT = 6
     val cons = new CdcRouter(spark, freshDir("cstore-feed"), _ => Seq("id"),
-      numBuckets = 2, consolidated = true)
-    val pool = new CdcRouter(spark, freshDir("cstore-feedp"), _ => Seq("id"),
-      numBuckets = 2, partitionedApplyMinTables = Int.MaxValue)
+      numBuckets = 2)
+    val pool = new PerTableRef("cstore-feedp", _ => Seq("id"), numBuckets = 2)
     // v2 widens the payload (extra) while updating id 2 and inserting
     // id 9; v3 re-inserts id 1, which v1 deleted; v4 is a compaction.
     // Every batch touches every table, so per-table CdcTable versions
@@ -450,12 +511,12 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
           concat(lit(s"w$seq-"), $"id").as("val"),
           concat(lit("x"), $"id").as("extra")).as("row"),
           lit(op).as("op"), key(seq))
-    for (r <- Seq(cons, pool)) {
-      r.applyBatch(inserts(nT, 4, 0L), 0L)
-      r.applyBatch(mutations(nT, 1L), 1L)
-      r.applyBatch(widened(Seq(2L), "UPDATE", 2L)
+    for (apply <- Seq[(DataFrame, Long) => Unit](cons.applyBatch, pool.applyBatch)) {
+      apply(inserts(nT, 4, 0L), 0L)
+      apply(mutations(nT, 1L), 1L)
+      apply(widened(Seq(2L), "UPDATE", 2L)
         .unionByName(widened(Seq(9L), "INSERT", 2L)), 2L)
-      r.applyBatch(widened(Seq(1L), "INSERT", 3L), 3L)
+      apply(widened(Seq(1L), "INSERT", 3L), 3L)
     }
     cons.store.compact()
     for (i <- 0 until nT) pool.table(s"t$i").compact(minFiles = 1)
@@ -567,8 +628,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       src.resolve("b1_oracle-cdc-logminer_0_1.avro"), "DEPARTMENTS")
     val schema = DatastreamAvro.sparkSchema(s"$fixtures/dump.avro")
     val r = new CdcRouter(spark, root.resolve("store").toString,
-      _ => Seq("EMPLOYEE_ID"), numBuckets = 2, databaseName = "xe",
-      consolidated = true)
+      _ => Seq("EMPLOYEE_ID"), numBuckets = 2, databaseName = "xe")
     // maintenanceEvery exercises the in-stream maintain() wiring live:
     // default bars never compact this small fleet and young segments
     // are age-spared, so exactly-once and final state must be
@@ -694,7 +754,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       "sparse-touch fleet's read path flat without changing state; " +
       "pool mode refuses") {
     val r = new CdcRouter(spark, freshDir("cstore-maint2"),
-      _ => Seq("id"), consolidated = true)
+      _ => Seq("id"))
     r.applyBatch(inserts(6, 3, 0L), 0L)
     for (seq <- 1L to 4L)
       r.applyBatch(sparseTouch((seq % 6).toInt, seq), seq)
@@ -716,10 +776,11 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     val v = r.store.currentVersion
     r.maintain(maxAgeMs = -60000)
     assert(r.store.currentVersion == v)
-    // pool mode refuses loudly
-    val pool = new CdcRouter(spark, freshDir("cstore-maint2p"),
-      _ => Seq("id"))
-    intercept[IllegalArgumentException](pool.maintain())
+    // pool mode is retired: asking for it refuses loudly, naming the
+    // parameter
+    val e = intercept[IllegalArgumentException](new CdcRouter(spark,
+      freshDir("cstore-maint2p"), _ => Seq("id"), consolidated = false))
+    assert(e.getMessage.contains("consolidated"), e.getMessage)
   }
 
   test("in-stream maintenance is lease-elected: the holder's " +
@@ -743,7 +804,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       assert(lease.tryAcquire(leaseHolder).isDefined)
       val r = new CdcRouter(spark, root.resolve("store").toString,
         _ => Seq("EMPLOYEE_ID"), databaseName = "xe",
-        consolidated = true, consolidatedCheckpointInterval = 1)
+        consolidatedCheckpointInterval = 1)
       val schema = DatastreamAvro.sparkSchema(s"$fixtures/dump.avro")
       val q = r.start(s"$src/*.avro", schema,
         root.resolve("ckpt").toString, trigger = trig,
@@ -816,7 +877,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     val r1 = new CdcRouter(spark, tmp("cwiden-root"),
       _ => Seq("EMPLOYEE_ID"), numBuckets = 2,
       allowlist = TableAllowlist(Seq("HR.EMPLOYEES")),
-      databaseName = "xe", filenameKeyed = true, consolidated = true)
+      databaseName = "xe", filenameKeyed = true)
     val ckpt = tmp("cwiden-ckpt")
     val q1 = r1.start(s"$src/*.avro", schema, ckpt, trigger = trig)
     q1.processAllAvailable()
@@ -833,7 +894,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     val rb = new CdcRouter(spark, tmp("cwiden-ref"),
       _ => Seq("EMPLOYEE_ID"), numBuckets = 2,
       allowlist = TableAllowlist(Seq("HR.EMPLOYEES", "HR.DEPARTMENTS")),
-      databaseName = "xe", filenameKeyed = true, consolidated = true)
+      databaseName = "xe", filenameKeyed = true)
     val qb = rb.start(s"$src/*.avro", schema, tmp("cwiden-refckpt"),
       trigger = trig)
     qb.processAllAvailable()
@@ -876,7 +937,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
       else Seq("EMPLOYEE_ID")
     val r1 = new CdcRouter(spark, tmp("gwiden-root"), pkFor,
       numBuckets = 2, allowlist = TableAllowlist(Seq("HR.EMPLOYEES")),
-      databaseName = "xe", filenameKeyed = true, consolidated = true)
+      databaseName = "xe", filenameKeyed = true)
     val ckpt = tmp("gwiden-ckpt")
     val q1 = r1.start(s"$src/*.avro", schema, ckpt, trigger = trig)
     q1.processAllAvailable()
@@ -892,7 +953,7 @@ class ConsolidatedStoreSpec extends AnyFunSuite {
     val rb = new CdcRouter(spark, tmp("gwiden-ref"), pkFor,
       numBuckets = 2,
       allowlist = TableAllowlist(Seq("HR.EMPLOYEES", "HR.DEPARTMENTS")),
-      databaseName = "xe", filenameKeyed = true, consolidated = true)
+      databaseName = "xe", filenameKeyed = true)
     val qb = rb.start(s"$src/*.avro", schema, tmp("gwiden-refckpt"),
       trigger = trig)
     qb.processAllAvailable()

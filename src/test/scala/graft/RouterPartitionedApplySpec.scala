@@ -8,13 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CdcRouter
 
-/** The router's single-job partitioned apply (the many-small-tables
-  * regime, SURVEY §7.4): one multi-table collapse + one full-outer
-  * merge + one (table, bucket)-partitioned write, committed per table
-  * with driver-side renames — against the per-table pool path as the
-  * semantic reference. Final state must be identical row-for-row,
-  * across creates, updates, deletes, replays, and a drift batch that
-  * must FALL BACK to the per-table path. */
+/** Table names that would escape a path, through the router: the
+  * router builds no path from a table name (tables live inside
+  * consolidated stores under the router root), so such names either
+  * land inside the root or, where the store's encodings cannot carry
+  * them, fail loudly before anything is committed. */
 class RouterPartitionedApplySpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -24,301 +22,26 @@ class RouterPartitionedApplySpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private def key(seq: Long) = struct(lit(seq).as("ts_ms"),
-    lit(seq).as("scn"), lit("").as("rs_id"), lit(0L).as("ssn"))
-    .as("sort_key")
-
-  /** nTables × rowsPer INSERT batch: table t<i>, ids 0..rowsPer-1. */
-  private def inserts(nTables: Int, rowsPer: Int, seq: Long): DataFrame = {
-    import spark.implicits._
-    spark.range(nTables.toLong * rowsPer)
-      .select(
-        concat(lit("t"), ($"id" % nTables).cast("string")).as("table_name"),
-        struct(($"id" / nTables).cast("long").as("id"),
-          concat(lit("v"), $"id").as("val")).as("row"),
-        lit("INSERT").as("op"), key(seq))
-  }
-
-  /** Mixed second batch: update id 0, delete id 1 in every table. */
-  private def mutations(nTables: Int, seq: Long): DataFrame = {
-    import spark.implicits._
-    val upd = spark.range(nTables.toLong)
-      .select(concat(lit("t"), $"id").as("table_name"),
-        struct(lit(0L).as("id"), lit("updated").as("val")).as("row"),
-        lit("UPDATE").as("op"), key(seq))
-    val del = spark.range(nTables.toLong)
-      .select(concat(lit("t"), $"id").as("table_name"),
-        struct(lit(1L).as("id"), lit(null).cast("string").as("val")).as("row"),
-        lit("DELETE").as("op"), key(seq))
-    upd.unionByName(del)
-  }
-
-  private def newRouter(tag: String, minTables: Int): CdcRouter = {
-    val root = Files.createTempDirectory(Paths.get("target"), tag)
-    new CdcRouter(spark, root.toString, _ => Seq("id"), numBuckets = 4,
-      partitionedApplyMinTables = minTables)
-  }
-
-  private def stateOf(r: CdcRouter, n: String): Seq[(Long, String, Boolean)] = {
-    import spark.implicits._
-    r.table(n).state.get
-      .select($"id", $"val", $"_is_deleted")
-      .as[(Long, String, Boolean)].collect().toSeq.sortBy(_._1)
-  }
-
-  test("partitioned apply ≡ per-table pool path (creates, updates, " +
-      "deletes) and commits CREATE_TABLE + versions per table") {
-    val nT = 12
-    val part = newRouter("router-part", minTables = 8) // engages
-    val pool = newRouter("router-pool", minTables = Int.MaxValue)
-    for (r <- Seq(part, pool)) {
-      r.applyBatch(inserts(nT, 5, seq = 0L), 0L)
-      r.applyBatch(mutations(nT, seq = 1L), 1L)
-    }
-    for (i <- 0 until nT) {
-      val n = s"t$i"
-      assert(stateOf(part, n) == stateOf(pool, n), s"state diverged for $n")
-      assert(part.table(n).currentVersion.contains(1L),
-        s"partitioned path must commit one version per batch for $n")
-      val ddl = part.table(n).ddlEvents
-      assert(ddl.exists(_.contains("CREATE_TABLE")), s"no CREATE_TABLE for $n")
-    }
-    // deleted row is soft-deleted, update won
-    val s3 = stateOf(part, "t3")
-    assert(s3.size == 5)
-    assert(s3.find(_._1 == 1L).exists(_._3 == true))
-    assert(s3.find(_._1 == 0L).exists(_._2 == "updated"))
-  }
-
-  test("replaying a batch through the partitioned path is idempotent " +
-      "on final state") {
-    val part = newRouter("router-replay", minTables = 8)
-    part.applyBatch(inserts(10, 4, seq = 0L), 0L)
-    part.applyBatch(mutations(10, seq = 1L), 1L)
-    val before = (0 until 10).map(i => stateOf(part, s"t$i"))
-    part.applyBatch(mutations(10, seq = 1L), 2L) // at-least-once redelivery
-    val after = (0 until 10).map(i => stateOf(part, s"t$i"))
-    assert(before == after)
-  }
-
-  test("schema drift falls back to the per-table path and still lands") {
-    import spark.implicits._
-    val part = newRouter("router-drift", minTables = 8)
-    part.applyBatch(inserts(9, 3, seq = 0L), 0L)
-    // widened payload: extra column — eligibility check must refuse
-    // the single-job path (committed schema != incoming)
-    val drifted = spark.range(9L)
-      .select(concat(lit("t"), $"id").as("table_name"),
-        struct(lit(99L).as("id"), lit("x").as("val"),
-          lit(7L).as("extra")).as("row"),
-        lit("INSERT").as("op"), key(5L))
-    part.applyBatch(drifted, 1L)
-    val st = part.table("t4").state.get
-    assert(st.columns.contains("extra"))
-    assert(st.filter($"id" === 99L).select($"extra")
-      .as[Long].head() == 7L)
-    // pre-drift rows null-filled
-    assert(st.filter($"id" === 0L).select($"extra".isNull).as[Boolean].head())
-  }
-
-  test("a writer committing between the prior read and the staged " +
-      "commit surfaces as a retryable conflict, never a lost update") {
-    import graft.cdc.ConcurrentCommitException
-    val part = newRouter("router-race", minTables = 8)
-    part.applyBatch(inserts(10, 3, seq = 0L), 0L)
-    val t3 = part.table("t3")
-    // capture the base the staged merge would have read...
-    val (basedOn, _) = t3.versionedBucketDirs
-    assert(basedOn.contains(0L))
-    // ...then a racing writer commits version 1
-    import spark.implicits._
-    t3.applyBatch(Seq((0L, "racer")).toDF("id", "val")
-      .select(struct($"id", $"val").as("row"),
-        lit("UPDATE").as("op"), key(9L)), 9L)
-    assert(t3.currentVersion.contains(1L))
-    // a staged commit based on version 0 must CAS-fail at version 1
-    val staged = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "race-staged")
-    val bucketDir = staged.resolve("_bucket=0")
-    java.nio.file.Files.createDirectories(bucketDir)
-    val payload = spark.range(1).select(struct($"id").as("row"))
-      .schema("row").dataType
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    intercept[ConcurrentCommitException] {
-      t3.commitStaged(Seq(0 -> bucketDir), payload, basedOn)
-    }
-    // the racer's update survives
-    assert(stateOf(part, "t3").find(_._1 == 0L).exists(_._2 == "racer"))
-  }
-
-  test("non-identifier table names keep the batch on the per-table " +
-      "path (partition-dir escaping would break the staged commit)") {
-    import spark.implicits._
-    val root = Files.createTempDirectory(Paths.get("target"), "router-esc")
-    val r = new CdcRouter(spark, root.toString, _ => Seq("id"),
-      numBuckets = 2, partitionedApplyMinTables = 2)
-    // one exotic name among plain ones — the whole batch must fall
-    // back and still land correctly
-    val ev = inserts(3, 4, seq = 0L)
-      .withColumn("table_name",
-        when($"table_name" === "t1", lit("s:t=1")).otherwise($"table_name"))
-    r.applyBatch(ev, 0L)
-    assert(r.table("s:t=1").state.get.count() == 4)
-    assert(r.table("t0").state.get.count() == 4)
-  }
-
-  test("sweepStaging reaps orphaned router-root staging dirs, spares " +
-      "young ones AND a stale-rooted dir with fresh nested writes") {
-    val root = Files.createTempDirectory(Paths.get("target"), "router-sw")
-    val r = new CdcRouter(spark, root.toString, _ => Seq("id"))
-    def ft(ms: Long) = java.nio.file.attribute.FileTime.fromMillis(ms)
-    val past = System.currentTimeMillis() - 2L * 60 * 60 * 1000
-    // truly orphaned: EVERY entry old
-    val old = root.resolve("_staging-mb7-deadbeef")
-    Files.createDirectories(old.resolve("table_name=t0"))
-    Files.write(old.resolve("table_name=t0").resolve("x"), "x".getBytes)
-    Files.setLastModifiedTime(old.resolve("table_name=t0").resolve("x"), ft(past))
-    Files.setLastModifiedTime(old.resolve("table_name=t0"), ft(past))
-    Files.setLastModifiedTime(old, ft(past))
-    // LIVE partitioned apply: a long parquet write mutates only nested
-    // entries, so the root looks stale while an inner file is fresh —
-    // sweeping it would fail the in-flight batch
-    val live = root.resolve("_staging-mb9-12345678")
-    Files.createDirectories(live.resolve("table_name=t1"))
-    Files.write(live.resolve("table_name=t1").resolve("part-0"), "y".getBytes)
-    Files.setLastModifiedTime(live.resolve("table_name=t1"), ft(past))
-    Files.setLastModifiedTime(live, ft(past))
-    val young = root.resolve("_staging-mb8-cafebabe")
-    Files.createDirectories(young)
-    val swept = r.sweepStaging()
-    assert(swept.exists(_.endsWith("_staging-mb7-deadbeef")))
-    assert(!Files.exists(old))
-    assert(Files.exists(young))
-    assert(Files.exists(live), "stale-rooted dir with fresh nested " +
-      "write must be treated as live")
-  }
+  private def insertInto(table: String): DataFrame =
+    spark.range(1).select(lit(table).as("table_name"),
+      struct(lit(0L).as("id"), lit("x").as("val")).as("row"),
+      lit("INSERT").as("op"),
+      struct(lit(0L).as("ts_ms"), lit(0L).as("scn"), lit("").as("rs_id"),
+        lit(0L).as("ssn")).as("sort_key"))
 
   test("path-escaping table names fail loudly instead of resolving " +
       "outside the router root") {
     val root = Files.createTempDirectory(Paths.get("target"), "router-dot")
     val r = new CdcRouter(spark, root.toString, _ => Seq("id"))
-    for (bad <- Seq(".", "..", "a/../../x"))
-      intercept[IllegalArgumentException](r.table(bad))
-    // and dot-names never reach the staged-commit path: the charset
-    // check admits "..", the pure-dot exclusion keeps it off the
-    // partitioned path before table() would throw
-    assert(r.table("a.b").location.startsWith(root.toString))
-  }
-
-  test("mixed fleet: grouped partitioned apply — one single-job apply " +
-      "per PK-signature group, drifted table pooled, state ≡ pool path") {
-    import spark.implicits._
-    def pkFor(n: String): Seq[String] =
-      if (n.startsWith("a")) Seq("id") else Seq("id", "val")
-    def mk(tag: String, minTables: Int): CdcRouter = new CdcRouter(spark,
-      Files.createTempDirectory(Paths.get("target"), tag).toString,
-      pkFor, numBuckets = 2, partitionedApplyMinTables = minTables)
-    val grouped = mk("router-mix", minTables = 4)
-    val pooled = mk("router-mix-pool", minTables = Int.MaxValue)
-    // fleet: a0..a4 (pk id), b0..b4 (pk id,val), plus table "drift"
-    // pre-created with a NARROWER committed payload than the batch
-    def batchFor(r: CdcRouter, seq: Long, op: String): DataFrame = {
-      val names = (0 until 5).flatMap(i => Seq(s"a$i", s"b$i")) :+ "drift"
-      names.zipWithIndex.map { case (n, i) =>
-        spark.range(3).select(lit(n).as("table_name"),
-          struct(($"id" + i * 10).as("id"),
-            concat(lit(s"$op$seq-"), $"id").as("val"),
-            lit(i.toLong).as("extra")).as("row"),
-          lit(op).as("op"), key(seq))
-      }.reduce(_ unionByName _)
-    }
-    var plan1: (Seq[Seq[String]], Seq[String]) = (Nil, Nil)
-    for (r <- Seq(grouped, pooled)) {
-      // commit "drift" first with a payload LACKING `extra`
-      r.table("drift").applyBatch(
-        spark.range(1).select(struct(lit(990L).as("id"),
-          lit("seed").as("val")).as("row"), lit("INSERT").as("op"),
-          key(0L)), 0L)
-      r.applyBatch(batchFor(r, 1L, "INSERT"), 1L)
-      if (r eq grouped) plan1 = r.lastApplyPlan
-      r.applyBatch(batchFor(r, 2L, "UPDATE"), 2L)
-    }
-    // batch-1 dispatch: two partitioned groups (a*, b*), drift pooled
-    // (committed payload lacks `extra` — the ALTER belongs to the
-    // per-table path)
-    val (groups, pool) = plan1
-    assert(groups.map(_.toSet).toSet ==
-      Set((0 until 5).map(i => s"a$i").toSet,
-        (0 until 5).map(i => s"b$i").toSet))
-    assert(pool == Seq("drift"))
-    // batch 2: drift has widened, so it legitimately JOINS its
-    // pk-signature group — the fleet converges back to O(groups) jobs
-    assert(grouped.lastApplyPlan._2.isEmpty)
-    assert(pooled.lastApplyPlan._1.isEmpty)
-    // final state identical table-for-table
-    for (n <- (0 until 5).flatMap(i => Seq(s"a$i", s"b$i")) :+ "drift") {
-      val a = grouped.table(n).state.get.drop("_sequence_num")
-        .collect().map(_.toString).sorted.toSeq
-      val b = pooled.table(n).state.get.drop("_sequence_num")
-        .collect().map(_.toString).sorted.toSeq
-      assert(a == b, s"state diverged for $n")
-    }
-    // the drifted table really widened (ALTER landed via the pool path)
-    assert(grouped.table("drift").state.get.columns.contains("extra"))
-  }
-
-  test("suite-speed scale pin: at 256 tables the partitioned path " +
-      "engages and its steady-state batch runs well under the pool " +
-      "path's wall (eligibility/plan-shape regression guard)") {
-    val nT = 256
-    def run(minTables: Int): (CdcRouter, Double) = {
-      val r = new CdcRouter(spark,
-        Files.createTempDirectory(Paths.get("target"), "router-pin").toString,
-        _ => Seq("id"), numBuckets = 1,
-        partitionedApplyMinTables = minTables)
-      r.applyBatch(inserts(nT, 2, 0L), 0L) // create batch (warmup)
-      // best of two steady batches — the repeating regime, with the
-      // first-batch jitter (codegen, FS cache) amortized out
-      val walls = Seq(1L, 2L).map { seq =>
-        val t0 = System.nanoTime()
-        r.applyBatch(mutations(nT, seq), seq)
-        (System.nanoTime() - t0) / 1e9
-      }
-      (r, walls.min)
-    }
-    val (part, partSteady) = run(minTables = 1)
-    val (pool, poolSteady) = run(minTables = Int.MaxValue)
-    // the plan-shape half of the guard is deterministic: one group of
-    // 256 through the single-job path vs everything pooled
-    assert(part.lastApplyPlan._1.map(_.size) == Seq(nT))
-    assert(pool.lastApplyPlan._1.isEmpty &&
-      pool.lastApplyPlan._2.size == nT)
-    // the wall-clock half (RouterScale measures 3.0-3.6x at width;
-    // 0.5x leaves headroom for co-tenant noise while still failing
-    // fast if the partitioned path degenerates to per-table jobs)
-    assert(partSteady < poolSteady * 0.5,
-      f"partitioned steady $partSteady%.2f s vs pool $poolSteady%.2f s " +
-        "— single-job advantage lost")
-    // and the states agree, so the speed didn't come from skipping work
-    assert(stateOf(part, "t7") == stateOf(pool, "t7"))
-  }
-
-  test("heterogeneous PKs keep the batch on the per-table path") {
-    val root = Files.createTempDirectory(Paths.get("target"), "router-hpk")
-    val r = new CdcRouter(spark, root.toString,
-      n => if (n == "t0") Seq("id") else Seq("id"), numBuckets = 4,
-      partitionedApplyMinTables = 8)
-    // uniform case sanity (the eligibility positive leg is covered
-    // above); the negative leg: different pk list for one table
-    val r2 = new CdcRouter(spark,
-      Files.createTempDirectory(Paths.get("target"), "router-hpk2").toString,
-      n => if (n == "t0") Seq("val") else Seq("id"), numBuckets = 4,
-      partitionedApplyMinTables = 8)
-    r.applyBatch(inserts(10, 2, seq = 0L), 0L)
-    r2.applyBatch(inserts(10, 2, seq = 0L), 0L)
-    // both land the same final state regardless of chosen path
-    for (i <- 0 until 10)
-      assert(r.table(s"t$i").state.get.count() ==
-        r2.table(s"t$i").state.get.count())
+    for (bad <- Seq(".", ".."))
+      intercept[IllegalArgumentException](r.applyBatch(insertInto(bad), 0L))
+    assert(r.knownTables.isEmpty)
+    // a name that would climb out of the root as a path lands inside it
+    val escapee = root.resolve("a/../../x").normalize()
+    assert(!escapee.startsWith(root) && !Files.exists(escapee))
+    r.applyBatch(insertInto("a/../../x"), 0L)
+    assert(r.knownTables == Seq("a/../../x"))
+    assert(r.stateOf("a/../../x").get.count() == 1)
+    assert(!Files.exists(escapee))
   }
 }
