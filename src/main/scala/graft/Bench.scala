@@ -1,183 +1,61 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
+import graft.obs.{Probe, Work}
+import graft.util.Fs
+
 /** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints one JSON line. Each query is fully
-  * materialized through the noop sink (count() would let Catalyst
-  * prune the measured work down to row counting).
+  * SPARK_GRAFT_SF_DIR in one window and prints one JSON line, last.
+  * Each query is fully materialized through the noop sink (count()
+  * would let Catalyst prune the measured work down to row counting).
   *
-  * Survival contract with the driver harness (round-6 post-mortem:
-  * the run was SIGKILLed mid-resample and left rc=1 / no parseable
-  * line): the committed artifact and the stdout JSON line are written
-  * from in-run numbers FIRST; only then does the optional fresh-JVM
-  * drift resample run, and if it succeeds the artifact and line are
-  * re-written with the reconciled numbers. Any failure in the
-  * resample phase (timeout, OOM-killed child, parse failure) is
-  * swallowed — the in-run artifact already on disk is the result, and
-  * main exits 0. The parent SparkContext is stopped before the child
-  * JVM spawns so parent+child never hold two executor heaps at once.
+  * A query's time is an adaptive in-run min-of-n (see `main`). A
+  * [[Probe]] tags every sample's jobs and streams, and the work record
+  * of a query's last sample — always a warm one — rides beside its
+  * time in the `layers` map of the run record, so a slow number says
+  * whether the query did more work or the host was slower. The record
+  * is read after `spark.stop()`, which drains the listener bus.
+  *
+  * `--family=q,d` runs those family prefixes and `--only=<names>` runs
+  * exact names: the single-query min-of-n tool. A subset run writes its
+  * record to `target/bench-subset.json`, never to the committed
+  * `BENCH_FULL.json`.
   */
 object Bench {
 
-  /** Per-query values from a committed BENCH_FULL.json — tolerant of
-    * both writers of that file (the Scala single-line format and the
-    * audit tool's compact json.dumps). */
-  private[graft] def parsePrior(txt: String): Map[String, Double] =
-    "\"([a-z][0-9a-z_]+)\":([0-9.]+)".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
-
-  /** A measurement needs a fresh-JVM isolation pass iff it drifted
-    * >1.5x above its previous committed value AND by >0.4 s absolute
-    * (sub-second jitter is not worth a JVM). 1.5x matches the round-5
-    * verdict's acceptance bar; the original 2x cut let a sustained
-    * burst park a family at 1.9x. Failed queries (t < 0) and queries
-    * with no prior never resample. */
-  private[graft] def needsResample(name: String, t: Double,
-      prior: Map[String, Double]): Boolean =
-    t > 0 && prior.get(name).exists(p => t > p * 1.5 && t - p > 0.4)
-
-  /** Keep the MIN of the in-run and isolation numbers: both measure
-    * the same code and co-tenant noise only ADDS time, so the
-    * quietest observation is the best estimate — a burst can span the
-    * isolation pass too (observed: the same query at 1.5 s, 5.0 s and
-    * 22.0 s in three consecutive fresh JVMs during one noisy window).
-    * Queries absent from the isolation result keep their in-run
-    * value. */
-  private[graft] def reconcile(measured: Seq[(String, Double)],
-      sub: Map[String, Double]): Seq[(String, Double)] =
-    measured.map { case (n, t) =>
-      n -> sub.get(n).map(v => math.min(v, t)).getOrElse(t)
+  /** The query names a run measures, sorted: all of `names`, or the
+    * `--family=` prefixes and `--only=` names of `args`. A family or
+    * name that matches no query, or any other argument, fails the run
+    * before it starts, listing every one of them. */
+  private[graft] def select(names: Seq[String], args: Seq[String]): Seq[String] = {
+    def list(flag: String): Option[Seq[String]] = args.collectFirst {
+      case a if a.startsWith(flag) =>
+        a.stripPrefix(flag).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     }
-
-  /** Family-level drift re-pass (round-15 verdict item 1): when ≥
-    * [[FamilyDriftK]] queries of ONE family prefix still sit past the
-    * per-query drift bar AFTER the isolation resample, the family
-    * moved together — on zero-diff code that is a sustained co-tenant
-    * burst spanning both passes (r15: d02/d04/d06/d09 read 0.26–0.48×
-    * while the same-round 8-core run beat the 32-core total; the
-    * per-query resample fired but the burst outlasted it). One more
-    * fresh-JVM pass over the still-drifted members settles it for
-    * seconds of wall and keeps the next round's PERF geomean from
-    * being a machine-state artifact. Returns the names to re-pass —
-    * empty when no family is coherently drifted. */
-  private[graft] val FamilyDriftK = 3
-  private[graft] def familyRepass(results: Seq[(String, Double)],
-      prior: Map[String, Double]): Seq[String] =
-    results.filter { case (n, t) => needsResample(n, t, prior) }
-      .groupBy(_._1.takeWhile(!_.isDigit))
-      .filter(_._2.size >= FamilyDriftK)
-      .values.flatten.map(_._1).toSeq.sorted
-
-  /** Fast-path eligibility: a query whose prior committed value and
-    * whose first sample are both under the scheduling-floor threshold
-    * needs no confirmation sample — at that size the measurement is
-    * scheduling floor, not engine work, and a second run would only
-    * add to the 131-query surface's fixed wall-clock cost. Bounded
-    * error: the committed value can exceed the true min by at most
-    * the threshold. */
-  private[graft] val FastPathSec = 0.35
-  private[graft] def fastPath(name: String, t1: Double,
-      prior: Map[String, Double]): Boolean =
-    t1 >= 0 && t1 <= FastPathSec && prior.get(name).exists(_ <= FastPathSec)
+    def family(n: String) = n.takeWhile(!_.isDigit)
+    val families = list("--family=")
+    val only = list("--only=")
+    val unknown = args.filterNot(a =>
+      a.startsWith("--family=") || a.startsWith("--only="))
+    require(unknown.isEmpty, s"unknown arguments: ${unknown.mkString(" ")}")
+    val unmatched =
+      families.getOrElse(Nil).filterNot(f => names.exists(family(_) == f)) ++
+        only.getOrElse(Nil).filterNot(names.contains)
+    require(unmatched.isEmpty, s"no query matches: ${unmatched.mkString(", ")}")
+    val picked = names.sorted.filter(n =>
+      families.forall(_.contains(family(n))) && only.forall(_.contains(n)))
+    require(picked.nonEmpty, "the selection names no query")
+    picked
+  }
 
   /** 1-minute system load, or -1 where /proc is unavailable. */
   private[graft] def load1(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
+    try new String(Files.readAllBytes(
+      Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
-
-  // ---- machine-state telemetry + canary verdict (round-13 verdict
-  // item 3): every artifact line self-identifies a hot window instead
-  // of leaving the judge to reconstruct it from git archaeology. The
-  // canary queries and the 2x bar mirror tools/bench_audit.py.
-
-  private[graft] val Canaries =
-    Seq("t07_char_trigrams", "d02_minhash_pairs")
-  private[graft] val CanaryHotRatio = 2.0
-
-  /** Max canary ratio of this run vs the COMMITTED artifact (git show
-    * HEAD: — the disk file is the one this run overwrites) and the
-    * human verdict; (-1, "unknown") without a committed prior or when
-    * a subset run skipped the canaries. */
-  private[graft] def canaryVerdict(committed: Map[String, Double],
-      measured: Map[String, Double]): (Double, String) = {
-    val ratios = Canaries.flatMap(c =>
-      for (p <- committed.get(c); v <- measured.get(c) if p > 0 && v > 0)
-        yield v / p)
-    if (ratios.isEmpty) (-1.0, "unknown")
-    else {
-      val r = ratios.max
-      (r,
-        if (r > CanaryHotRatio) f"hot window ($r%.1fx committed canary)"
-        else "quiet")
-    }
-  }
-
-  // ---- machine-state-aware canary prior (round-14 verdict item 1):
-  // the committed prior reflects the machine state at COMMIT time.
-  // When the host itself moves (observed: t07, a zero-diff codegen
-  // kernel, stepping 0.20→0.50-0.54 s in every window since mid-r13),
-  // every subsequent window reads "hot" against the unreachable old
-  // prior and the verdict stops separating good windows from bad. So:
-  // when the last RebaseK windows' canary values AGREE within
-  // RebaseBand of each other while ALL sitting past the hot bar vs
-  // the committed value, the machine moved, not the run — adopt their
-  // median as the machine-state prior and stamp the adoption in the
-  // artifact ("canary_prior":"rebased(...)"). The committed value
-  // stays in git as the quiet-machine reference; a host that returns
-  // to it makes the windows disagree with the median and the rebase
-  // self-dissolves.
-  private[graft] val RebaseK = 3
-  private[graft] val RebaseBand = 1.3
-  private[graft] def effectivePrior(committed: Map[String, Double],
-      windows: Seq[Map[String, Double]])
-      : (Map[String, Double], Seq[String]) = {
-    val rebased = Canaries.flatMap { c =>
-      val vs = windows.flatMap(_.get(c)).filter(_ > 0).takeRight(RebaseK)
-      committed.get(c) match {
-        case Some(p) if vs.size == RebaseK &&
-            vs.max <= vs.min * RebaseBand && vs.min > p * CanaryHotRatio =>
-          Some(c -> vs.sorted.apply(RebaseK / 2))
-        case _ => None
-      }
-    }
-    (committed ++ rebased.toMap, rebased.map(_._1))
-  }
-
-  /** One line per full-surface run: this run's canary observations —
-    * the window history [[effectivePrior]] decides from. Committed to
-    * git alongside the artifact so the rebase rule sees across
-    * rounds. */
-  private[graft] val CanaryHistoryFile = "BENCH_CANARY_HISTORY.jsonl"
-
-  private[graft] def canaryHistory(): Seq[Map[String, Double]] =
-    try {
-      val p = java.nio.file.Paths.get(CanaryHistoryFile)
-      if (!java.nio.file.Files.exists(p)) Nil
-      else new String(java.nio.file.Files.readAllBytes(p)).linesIterator
-        .map(parsePrior).filter(_.nonEmpty).toSeq
-    } catch { case _: Throwable => Nil }
-
-  private def appendCanaryHistory(vals: Map[String, Double]): Unit =
-    try {
-      val kvs = Canaries.flatMap(c => vals.get(c).filter(_ > 0).map(v =>
-        "\"" + c + "\":" +
-          BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)))
-      if (kvs.nonEmpty)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(CanaryHistoryFile),
-          (kvs.mkString("{", ",", "}") + "\n").getBytes,
-          java.nio.file.StandardOpenOption.CREATE,
-          java.nio.file.StandardOpenOption.APPEND)
-    } catch { case _: Throwable => () }
-
-  /** Reconciliation provenance (round-14 verdict item 2): an artifact
-    * whose VALUES are minima over several windows must not wear one
-    * window's canary verdict as if it were a single observation. */
-  private[graft] def provenanceJson(nWindows: Int): String =
-    if (nWindows <= 1) ""
-    else s""","reconciled":true,"n_windows":$nWindows"""
 
   /** First line of /proc/stat → (idle+iowait, steal, total) jiffies.
     * Steal is the decisive field on this box: it is HOST-side
@@ -201,15 +79,15 @@ object Bench {
   }
 
   private[graft] def procStat(): Option[(Long, Long, Long)] =
-    try parseProcStat(new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/stat"))).linesIterator.next())
+    try parseProcStat(new String(Files.readAllBytes(
+      Paths.get("/proc/stat"))).linesIterator.next())
     catch { case _: Throwable => None }
 
   /** cpu0's current scaling frequency in kHz, -1 where unavailable
     * (containers often hide cpufreq). */
   private[graft] def curFreqKhz(): Long =
-    try new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
+    try new String(Files.readAllBytes(
+      Paths.get(
         "/sys/devices/system/cpu/cpu0/cpufreq/scaling_cur_freq")))
       .trim.toLong
     catch { case _: Throwable => -1L }
@@ -230,75 +108,31 @@ object Bench {
     (for ((_, s0, t0) <- a; (_, s1, t1) <- b if t1 > t0)
       yield (s1 - s0).toDouble / (t1 - t0) * 100).getOrElse(-1.0)
 
-  /** The telemetry fragment embedded in every artifact line.
-    * `canaryPrior` says WHICH prior the verdict was computed against:
-    * "committed", or "rebased(<canaries>)" when [[effectivePrior]]
-    * adopted a machine-state prior. */
+  /** The machine-state telemetry fragment embedded in every artifact
+    * line: data about the window, not a verdict on it. */
   private[graft] def telemetryJson(loadStart: Double, loadEnd: Double,
-      idlePct: Double, stealPct: Double, freqStart: Long, freqEnd: Long,
-      canaryRatio: Double, canary: String,
-      canaryPrior: String = "committed"): String =
+      idlePct: Double, stealPct: Double, freqStart: Long,
+      freqEnd: Long): String =
     f""","load_start":$loadStart%.1f,"load_end":$loadEnd%.1f""" +
       f""","idle_pct":$idlePct%.1f,"steal_pct":$stealPct%.2f""" +
-      s""","freq_khz_start":$freqStart,"freq_khz_end":$freqEnd""" +
-      f""","canary_ratio":$canaryRatio%.2f,"canary":"$canary"""" +
-      s""","canary_prior":"$canaryPrior""""
+      s""","freq_khz_start":$freqStart,"freq_khz_end":$freqEnd"""
 
-  /** Per-query values of the COMMITTED BENCH_FULL.json via git —
-    * empty when git or the file is unavailable. */
-  private[graft] def committedPrior(): Map[String, Double] =
-    try {
-      val p = new ProcessBuilder("git", "show", "HEAD:BENCH_FULL.json")
-        .redirectErrorStream(false).start()
-      val out = new String(p.getInputStream.readAllBytes())
-      if (p.waitFor() == 0) parsePrior(out) else Map.empty
-    } catch { case _: Throwable => Map.empty }
+  /** The run's totals over the queries' work records. */
+  private[graft] def workJson(records: Seq[Work]): String =
+    s""","work":{"jobs":${records.map(_.jobs).sum}""" +
+      s""","tasks":${records.map(_.tasks).sum}""" +
+      f""","job_s":${records.map(_.jobSec).sum}%.3f""" +
+      f""","cpu_s":${records.map(_.cpuSec).sum}%.3f}"""
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-
-    // Quiet-window gate (round-9 verdict item 1: the committed r9
-    // artifact was taken under measured co-tenant drift — 208.8 s vs
-    // 153.0 s for identical code — and burned a judge round on drift
-    // forensics). Before ANY Spark work this JVM contributes ~nothing
-    // to loadavg, so system load IS the co-tenant; waiting a bounded
-    // few minutes for it to fall is the cheapest honest variance
-    // reduction there is — it changes WHEN we measure, never what.
-    // Proceeds regardless at the deadline; the observed start/end
-    // loads are published in the JSON line so a drifted artifact is
-    // self-describing.
-    val quietBar = sys.env.getOrElse("SPARK_GRAFT_QUIET_LOAD", "8.0").toDouble
-    val quietWaitSec =
-      sys.env.getOrElse("SPARK_GRAFT_QUIET_WAIT", "600").toLong
-    val gate0 = System.currentTimeMillis()
-    var l0 = load1()
-    while (l0 > quietBar &&
-        System.currentTimeMillis() - gate0 < quietWaitSec * 1000) {
-      System.err.println(
-        f"[bench] co-tenant load $l0%.1f > $quietBar%.1f — waiting for " +
-          "a quiet window")
-      Thread.sleep(15000)
-      l0 = load1()
-    }
-    // Optional subset runs for local iteration: --family=q,d runs
-    // those family prefixes; --only=s18_knn_graph_approx runs exact
-    // names. Subset runs never overwrite the committed full-surface
-    // artifact and print their full per-query map (a subset is small
-    // enough to fit the harness's tail capture).
-    val families: Option[Set[String]] = args.collectFirst {
-      case a if a.startsWith("--family=") =>
-        a.stripPrefix("--family=").split(",").map(_.trim).toSet
-    }
-    val onlyNames: Option[Set[String]] = args.collectFirst {
-      case a if a.startsWith("--only=") =>
-        a.stripPrefix("--only=").split(",").map(_.trim).toSet
-    }
-    // telemetry anchors: sampled once the quiet gate releases, so the
-    // idle% window covers exactly the measured run
+    val selected = select(SparkEntry.queries.keys.toSeq, args.toSeq)
+    val subsetRun = args.nonEmpty
+    // telemetry anchors: the idle%/steal% window covers exactly the run
+    val load0 = load1()
     val stat0 = procStat()
     val freq0 = curFreqKhz()
-    val committed = committedPrior()
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -307,50 +141,34 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val probe = Probe.install(spark)
 
     // JVM/codegen warmup on the smallest SF so per-query numbers
     // reflect the engine, not first-use class loading.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
 
-    // Per-query values from the PREVIOUS committed artifact (if any):
-    // read BEFORE this run overwrites the file. Used twice — the
-    // sub-second fast path and the drift-resample decision.
-    val prior: Map[String, Double] = {
-      val p = java.nio.file.Paths.get("BENCH_FULL.json")
-      if (!java.nio.file.Files.exists(p)) Map.empty
-      else Bench.parsePrior(
-        new String(java.nio.file.Files.readAllBytes(p)))
-    }
-
-    // Adaptive min-of-n per query: the machine shows heavy co-tenant
-    // variance (round-4 artifact had 5-14x spikes on queries whose
-    // code hadn't changed; all reproduced fast in isolation). min-of-2
-    // is not enough when a burst outlasts both runs, so the min must
-    // be CONFIRMED by a second sample within 1.5x — otherwise take
-    // more samples (bounded at 5) and keep the min. Steady-state cost
-    // stays 2 runs/query (1 for prior-confirmed sub-second queries,
-    // the fastPath above); only burst-hit queries pay extra.
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter {
-      case (n, _) => families.forall(fs => fs(n.takeWhile(!_.isDigit))) &&
-        onlyNames.forall(_(n))
-    }
-    val measured = selected.map { case (name, fn) =>
+    // Adaptive min-of-n per query: co-tenant bursts only ADD time, so
+    // the min must be CONFIRMED by a second sample within 1.5x —
+    // otherwise take more samples (bounded at 5) and keep the min.
+    // Each sample is its own probe tag; the last one names the record.
+    val measured = selected.map { name =>
+      val fn = SparkEntry.queries(name)
+      var n = 0
       def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        n += 1
+        Probe.tagged(spark, s"$name#$n") {
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
       }
       val t =
         try {
-          val t1 = once()
-          if (fastPath(name, t1, prior)) t1
-          else {
-            var runs = List(t1, once())
-            while (runs.size < 5 &&
-                runs.sorted.tail.head > runs.min * 1.5) runs ::= once()
-            runs.min
-          }
+          var runs = List(once(), once())
+          while (runs.size < 5 &&
+              runs.sorted.tail.head > runs.min * 1.5) runs ::= once()
+          runs.min
         }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
@@ -359,34 +177,33 @@ object Bench {
       // must not tax the next query's measurement
       spark.sharedState.cacheManager.clearCache()
       spark.streams.active.foreach(_.stop())
-      name -> t
+      (name, t, s"$name#$n")
     }
+    // Unload state-store providers before stopping the context: a
+    // streaming query that died during setup never reaches its stop(),
+    // and its maintenance thread would otherwise outlive spark.stop()
+    // and stack-trace "SparkEnv not active" into the harness capture.
+    // A failed stop costs the records their last events, not the line.
+    try {
+      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      spark.stop()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] stop failed: ${e.getMessage}") }
+    val results = measured.map { case (name, t, _) => name -> t }
+    val layers = measured.map { case (name, _, tag) => name -> probe.record(tag) }
 
     // The harness captures only the last ~2000 chars of output, and a
     // 109-entry per-query map (~2.9 KB even at ms precision) pushed
     // the line's START out of the capture — rounds 1-3 all recorded
     // parsed:null. The printed line therefore carries the total,
-    // per-FAMILY group sums, and a fixed headline subset (~1.4 KB);
-    // the full per-query map goes to BENCH_FULL.json next to the run.
+    // per-FAMILY group sums, a fixed headline subset and the work
+    // totals (~1.5 KB); the per-query map and the work records go to
+    // the record file next to the run.
     def fmt(v: Double): String =
       BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def jmap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-    // machine-state-aware canary prior: the window history (committed
-    // runs' observations) plus THIS run decides whether the committed
-    // prior still describes the host; full runs append their own
-    // observation for the next window's decision
-    val subsetRun = families.nonEmpty || onlyNames.nonEmpty
-    val currentCanaries = measured.toMap
-      .filter { case (k, v) => Canaries.contains(k) && v > 0 }
-    val (effPrior, rebasedNames) =
-      effectivePrior(committed, canaryHistory() :+ currentCanaries)
-    val canaryPriorTag =
-      if (rebasedNames.nonEmpty) s"rebased(${rebasedNames.mkString(",")})"
-      else "committed"
-    if (!subsetRun) appendCanaryHistory(currentCanaries)
-
     val headline = Set(
       "c01_decode_dump", "c02_cdc_final_state", "c09_router_multiplex",
       "c16_stream_e2e", "d01_exact_dedup", "d02_minhash_pairs",
@@ -400,113 +217,26 @@ object Bench {
       "q45_stream_join", "q46_sliding_window", "q55_stream_sliding",
       "s01_cosine_topk", "s03_ann_lsh", "s07_quantize", "t01_token_stats",
       "t03_langid", "t07_char_trigrams", "t09_tfidf", "t13_lm_score")
-    def publish(results: Seq[(String, Double)],
-        nWindows: Int = 1): Unit = {
-      val total = results.map(_._2).filter(_ >= 0).sum
-      val groups = results.groupBy(_._1.takeWhile(!_.isDigit)).toSeq
-        .sortBy(_._1).map { case (g, rs) => g -> rs.map(_._2).filter(_ >= 0).sum }
-      // machine-state transparency: loadavg, /proc/stat idle%, cpu
-      // frequency, and the canary verdict vs the EFFECTIVE prior
-      // (committed, or the rebased machine-state prior — the line
-      // says which) all ride in both artifact lines, so a hot window
-      // reads as data ("canary":"hot window (2.1x committed canary)")
-      // instead of a forensics exercise for the next judge. A
-      // reconciled re-publish stamps its provenance too.
-      val (cr, cv) = canaryVerdict(effPrior, results.toMap)
-      val stat1 = procStat()
-      val loads = telemetryJson(l0, load1(), idlePct(stat0, stat1),
-        stealPct(stat0, stat1), freq0, curFreqKhz(), cr, cv,
-        canaryPriorTag) + provenanceJson(nWindows)
-      val full = s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
-        s""","n_queries":${results.size},"queries":${jmap(results)}""" +
-        loads + s""","sf":"$sfDir"}"""
-      val subset = subsetRun
-      if (!subset) {
-        // tmp + atomic move, not Files.write in place: a SIGKILL mid-
-        // rewrite would otherwise truncate the very artifact the
-        // publish-first design exists to protect
-        val tmp = java.nio.file.Paths.get("BENCH_FULL.json.tmp")
-        java.nio.file.Files.write(tmp, (full + "\n").getBytes)
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get("BENCH_FULL.json"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
-        s""","n_queries":${results.size}""" +
-        s""","groups":${jmap(groups)}""" +
-        s""","queries":${jmap(
-          if (subset) results else results.filter(r => headline(r._1)))}""" +
-        loads + s""","full":"BENCH_FULL.json","sf":"$sfDir"}""")
-    }
-
-    // ARTIFACT FIRST: the in-run numbers are committed to disk and
-    // stdout before any resample work begins, so a killed resample can
-    // no longer take the whole round's bench evidence with it. A
-    // successful resample prints a SECOND line; that is safe under the
-    // ~2000-char tail capture because the second line (~1.4 KB) fits
-    // whole, and the first line's surviving tail fragment cannot
-    // contain the '{"metric"' anchor (it only occurs at line start) —
-    // both first-anchor and last-line parsers land on the final,
-    // reconciled line.
-    publish(measured)
-
-    // Cross-check vs the prior artifact: queries that drifted >1.5x
-    // AND by more than a 0.4 s floor get one fresh-JVM isolation
-    // pass, then the artifact/line are re-published with
-    // min(in-run, isolation) per reconcile() above. The parent Spark
-    // context stops BEFORE the child spawns — measurement is done, and
-    // two live executor heaps at once is what got round 6's run
-    // SIGKILLed.
-    val drifted = measured.collect {
-      case (n, t) if needsResample(n, t, prior) => n
-    }
-    // Unload state-store providers before stopping the context: a
-    // streaming query that died during setup never reaches its stop(),
-    // and its maintenance thread would otherwise outlive spark.stop()
-    // and stack-trace "SparkEnv not active" into the harness capture.
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    spark.stop()
-    var results = measured
-    var windows = 1
-    if (drifted.nonEmpty) {
-      try {
-        System.err.println(
-          s"[bench] resampling ${drifted.size} drifted in fresh JVM: " +
-            drifted.mkString(","))
-        val sub = BenchSub.runIsolated(drifted, sfDir, cpus)
-        if (sub.nonEmpty) {
-          results = reconcile(results, sub)
-          windows += 1
-          publish(results, nWindows = windows)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(
-          s"[bench] resample phase failed, in-run artifact stands: " +
-            e.getMessage)
-      }
-    }
-    // Family-level re-pass (see familyRepass): a whole family still
-    // past the drift bar after the per-query isolation pass gets one
-    // more fresh-JVM window; the burst has to outlast THREE windows
-    // to park a family at an inflated value.
-    val famDrifted = familyRepass(results, prior)
-    if (famDrifted.nonEmpty) {
-      try {
-        System.err.println(
-          s"[bench] family drift re-pass (${famDrifted.size} queries): " +
-            famDrifted.mkString(","))
-        val sub = BenchSub.runIsolated(famDrifted, sfDir, cpus)
-        if (sub.nonEmpty) {
-          results = reconcile(results, sub)
-          windows += 1
-          publish(results, nWindows = windows)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(
-          s"[bench] family re-pass failed, prior artifact stands: " +
-            e.getMessage)
-      }
-    }
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val groups = results.groupBy(_._1.takeWhile(!_.isDigit)).toSeq
+      .sortBy(_._1).map { case (g, rs) => g -> rs.map(_._2).filter(_ >= 0).sum }
+    val stat1 = procStat()
+    val tail = telemetryJson(load0, load1(), idlePct(stat0, stat1),
+      stealPct(stat0, stat1), freq0, curFreqKhz()) + workJson(layers.map(_._2))
+    val recordFile = if (subsetRun) "target/bench-subset.json" else "BENCH_FULL.json"
+    val record = s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
+      s""","n_queries":${results.size},"queries":${jmap(results)}""" +
+      layers.map { case (k, w) => "\"" + k + "\":" + w.json }
+        .mkString(""","layers":{""", ",", "}") +
+      tail + s""","sf":"$sfDir"}"""
+    val recordPath = Paths.get(recordFile).toAbsolutePath
+    Files.createDirectories(recordPath.getParent)
+    Fs.writeAtomic(recordPath, (record + "\n").getBytes)
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec"""" +
+      s""","n_queries":${results.size}""" +
+      s""","groups":${jmap(groups)}""" +
+      s""","queries":${jmap(
+        if (subsetRun) results else results.filter(r => headline(r._1)))}""" +
+      tail + s""","full":"$recordFile","sf":"$sfDir"}""")
   }
 }

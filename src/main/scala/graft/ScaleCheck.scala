@@ -53,7 +53,8 @@ object ScaleCheck {
     // round 6 — c18/c19 replay a FIXED golden fixture regardless of
     // sfDir, so their panel ratio ≈1 evidences the per-action floor,
     // not data scaling; their scale story is the CdfFollow tail-bound
-    // spec + the StreamScale state-metrics panel
+    // spec + the state rows of the Bench work record (`--only=` on a
+    // ScaleCheck replica dir)
     "d16_semantic_dedup_scaled", "q59_recursive_cte",
     "s10_hybrid_rrf", "s11_mmr_rerank", "t18_novelty",
     "d15_semantic_dedup", "q60_rank_functions",

@@ -20,42 +20,51 @@ class ConcurrentCommitException(msg: String)
   extends graft.util.Retry.RecoverableSourceException(msg)
 
 object CdcTable {
-  /** Resolved bucket-union relations, memoized per (session, dir list
-    * with per-dir mtimes). Bucket dirs are IMMUTABLE once published
-    * ([[graft.util.Fs.publishDir]] is an atomic move that refuses
-    * existing names; manifests CAS), so a dir set's file listing and
-    * merged footer schema can only go stale if the dirs are deleted and
-    * recreated at the same names — which the mtime fingerprint in the
-    * key detects. A dir the driver cannot stat has no fingerprint, so
-    * a read that names one is not memoized. Values are LAZY plans:
-    * every action still reads the parquet bytes fresh from disk; what
-    * the memo removes is the
-    * per-read DRIVER cost — one file listing plus one distributed
-    * mergeSchema footer-inference job per `spark.read` — that every
-    * stateAt/changeFeed resolve was re-paying (guide §5 driver work,
-    * §6 I/O; the c-family lifecycle gates resolve the same immutable
-    * versions dozens of times per run, and at 100 TB a follower
-    * folding a commit log pays this once per version per consumer).
-    * Bounded: entries of stopped sessions are purged on every read
-    * (they can never hit again, and their plans pin a dead context),
-    * and the map is cleared wholesale past [[RelationCacheMax]] live
-    * entries (values are plans, not data — the bound is about key
+  /** Resolved parquet relations, memoized per (session, read schema,
+    * dir list with per-dir mtimes): the bucket unions behind every
+    * [[CdcTable]] read and the segment scans behind every
+    * [[ConsolidatedStore]] read. Those dirs are IMMUTABLE once
+    * published ([[graft.util.Fs.publishDir]] is an atomic move that
+    * refuses existing names; manifests CAS), so a dir set's file
+    * listing and footer schema can only go stale if the dirs are
+    * deleted and recreated at the same names — which the mtime
+    * fingerprint in the key detects. A dir the driver cannot stat has
+    * no fingerprint, so a read that names one is not memoized. The
+    * schema is the JSON of the read's declared schema ("" for an
+    * inferred, mergeSchema read), so a widened payload never hits a
+    * narrower relation. Values are LAZY plans: every action still
+    * reads the parquet bytes fresh from disk; what the memo removes is
+    * the per-read DRIVER cost — one file listing, plus one distributed
+    * mergeSchema footer-inference job for an inferred read — that
+    * every stateAt/changeFeed resolve was re-paying (guide §5 driver
+    * work, §6 I/O; the c-family lifecycle gates resolve the same
+    * immutable versions dozens of times per run, and at 100 TB a
+    * follower folding a commit log pays this once per version per
+    * consumer). Bounded: entries of stopped sessions are purged on
+    * every read (they can never hit again, and their plans pin a dead
+    * context), and once [[RelationCacheMax]] live entries are held a
+    * new read is served uncached — a live session's entry is never
+    * evicted (values are plans, not data — the bound is about key
     * accumulation in long-lived multi-session JVMs like the test
     * runner). */
-  private val RelationCacheMax = 512
+  private[graft] val RelationCacheMax = 512
   private val relationCache =
     new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, Seq[(String, Long)]), DataFrame]()
+      (SparkSession, String, Seq[(String, Long)]), DataFrame]()
   private def mtimeOf(p: String): Option[Long] =
     try Some(Files.getLastModifiedTime(Paths.get(p)).toMillis)
     catch { case _: Exception => None }
-  private[graft] def cachedRead(spark: SparkSession, paths: Seq[String])
-      (mk: => DataFrame): DataFrame = {
+  private[graft] def cachedRead(spark: SparkSession, paths: Seq[String],
+      schema: String = "")(mk: => DataFrame): DataFrame = {
     relationCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    if (relationCache.size > RelationCacheMax) relationCache.clear()
     val stamps = paths.map(mtimeOf)
     if (stamps.contains(None)) mk
-    else relationCache.computeIfAbsent((spark, paths.zip(stamps.flatten)), _ => mk)
+    else {
+      val key = (spark, schema, paths.zip(stamps.flatten))
+      Option(relationCache.get(key)).getOrElse(
+        if (relationCache.size >= RelationCacheMax) mk
+        else relationCache.computeIfAbsent(key, _ => mk))
+    }
   }
 
   /** The sessions keying the memo's entries, one per entry. */

@@ -407,13 +407,16 @@ class ConsolidatedStore(
     * `payload` (older segments null-fill widened columns): one scan
     * per segment with the `table_name`/`_bucket` predicates pushed
     * into it, unioned. One footer probe for the sort-key shape is
-    * shared by every segment group. `pairs` is non-empty and its
-    * segments exist (the callers check). */
+    * shared by every segment group, and each segment's relation comes
+    * from [[CdcTable.cachedRead]], keyed by the read schema too.
+    * `pairs` is non-empty and its segments exist (the callers check). */
   private def readPairs(table: String, payload: StructType,
       pairs: Seq[(Int, String)]): DataFrame = {
     val schema = segSchema(payload, sortKeyTypeOf(pairs.head._2))
     pairs.groupBy(_._2).map { case (seg, ps) =>
-      spark.read.schema(schema).parquet(s"$path/$seg")
+      val segPath = s"$path/$seg"
+      CdcTable.cachedRead(spark, Seq(segPath), schema.json)(
+        spark.read.schema(schema).parquet(segPath))
         .filter(col("table_name") === table &&
           col("_bucket").isin(ps.map(_._1): _*))
     }.reduce(_ unionByName _).drop("table_name", "_bucket")

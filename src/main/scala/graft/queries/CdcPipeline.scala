@@ -44,8 +44,8 @@ object CdcPipeline {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
   private val jsonFixtureCache =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-  private val consolidatedCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, graft.cdc.ConsolidatedStore]()
+  private val fleetCache = new java.util.concurrent.ConcurrentHashMap[
+    SparkSession, graft.streaming.CdcRouter]()
   private def replayedTable(s: SparkSession): CdcTable = {
     val dir = replayCache.computeIfAbsent(s, _ => {
       val d = java.nio.file.Files.createTempDirectory("graft-replay").toString
@@ -128,8 +128,12 @@ object CdcPipeline {
     // replay (snapshot + CDC + PK-update + delete), both tables'
     // final states dumped with their table tag. The replay is the
     // shared once-per-session consolidated fixture c25/c26 also read
-    // (see the replayCache note)
-    "c09_router_multiplex" -> { (s, _) => fleetFinalState(s) },
+    // (see the replayCache note); c09 reads it through the router's
+    // own read API, c25 through the store it merges into
+    "c09_router_multiplex" -> { (s, _) =>
+      val r = fleetRouter(s)
+      fleetStates(s, r.knownTables.map(t => t -> r.stateOf(t).get))
+    },
 
     // time travel: the state as of version 2 (dump + insert + update
     // applied; PK-update and delete not yet) — one manifest resolve,
@@ -476,7 +480,10 @@ object CdcPipeline {
     // router merges into: segment files shared by both tables, ONE
     // fleet-wide CAS per batch — the 2,048+-table layout. The oracle
     // is c09's golden final state verbatim.
-    "c25_consolidated_fleet" -> { (s, _) => fleetFinalState(s) },
+    "c25_consolidated_fleet" -> { (s, _) =>
+      val store = fleetRouter(s).store
+      fleetStates(s, store.knownTables.map(t => t -> store.state(t).get))
+    },
 
     // ...and the store's SECOND IVM contract driver-gated (c25 gates
     // final state): the per-table post-image change feed at commit 3
@@ -489,7 +496,7 @@ object CdcPipeline {
     // O(touched) property the delta manifests exist for.
     "c26_consolidated_feed" -> { (s, _) =>
       import s.implicits._
-      val store = consolidatedStore(s)
+      val store = fleetRouter(s).store
       store.knownTables.flatMap { t =>
         store.changeFeed(t, 3L).map(_.select(
           lit(t).as("table_name"),
@@ -517,7 +524,7 @@ object CdcPipeline {
     // golden row.
     "c27_consolidated_stream_ivm" -> { (s, _) =>
       import s.implicits._
-      val store = consolidatedStore(s)
+      val store = fleetRouter(s).store
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft-c27-ckpt").toString
       val state = new java.util.concurrent.atomic.AtomicReference(
@@ -596,7 +603,7 @@ object CdcPipeline {
     // golden row.
     "c28_durable_stream_ivm" -> { (s, _) =>
       import s.implicits._
-      val store = consolidatedStore(s)
+      val store = fleetRouter(s).store
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft-c28-ckpt").toString
       val martDir = java.nio.file.Files
@@ -694,9 +701,8 @@ object CdcPipeline {
     * routed into the consolidated layout — segment files shared by
     * both tables, ONE fleet-wide CAS per batch (the 2,048+-table
     * physics). */
-  private def consolidatedStore(s: SparkSession)
-      : graft.cdc.ConsolidatedStore =
-    consolidatedCache.computeIfAbsent(s, _ => {
+  private def fleetRouter(s: SparkSession): graft.streaming.CdcRouter =
+    fleetCache.computeIfAbsent(s, _ => {
       import s.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft-cstore")
       val r = new graft.streaming.CdcRouter(s, dir.toString,
@@ -709,15 +715,15 @@ object CdcPipeline {
                 .otherwise("EMP_ODD"))
           r.applyBatch(e, i.toLong)
       }
-      r.store
+      r
     })
 
-  /** Both fleet tables' final states, tagged with the table name. */
-  private def fleetFinalState(s: SparkSession): DataFrame = {
+  /** Per-table states as one frame, tagged with the table name. */
+  private def fleetStates(s: SparkSession,
+      states: Seq[(String, DataFrame)]): DataFrame = {
     import s.implicits._
-    val store = consolidatedStore(s)
-    store.knownTables.map { t =>
-      store.state(t).get.select(
+    states.map { case (t, st) =>
+      st.select(
         lit(t).as("table_name"),
         $"EMPLOYEE_ID".as("employee_id"),
         $"FIRST_NAME".as("first_name"),

@@ -703,8 +703,8 @@ object Events {
 
     // ---- watermark-BOUNDED streaming dedup: the production form of
     //      q41. Plain dropDuplicates keeps every key forever — state
-    //      grows with distinct keys, exactly key-linear at 100× (the
-    //      StreamScale q41 row), which at a 100 TB fingerprint-keyed
+    //      grows with distinct keys, exactly key-linear at 100× (q41's
+    //      state rows, 100× replica), which at a 100 TB fingerprint-keyed
     //      ingest is unbounded memory. dropDuplicatesWithinWatermark
     //      bounds state to the watermark horizon: keys older than the
     //      delay evict, trading global uniqueness for "no duplicate

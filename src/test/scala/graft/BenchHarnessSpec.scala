@@ -1,135 +1,54 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bench measurement pipeline is what writes the committed
-  * artifact the next round's judge diffs — its decision logic is
-  * load-bearing and gets the same unit coverage as an operator. */
+import graft.obs.{Probe, Work}
+
+/** The bench harness writes the committed artifact the next change is
+  * measured against: its query selection, its telemetry and the probe
+  * behind its work records get the same unit coverage as an operator.
+  * The probe legs build and stop their own session, and read the
+  * record after `spark.stop()` (which drains the listener bus), just
+  * as `Bench` does. */
 class BenchHarnessSpec extends AnyFunSuite {
 
-  test("parsePrior reads both artifact writers' formats") {
-    // the Scala single-line writer
-    val scalaFmt =
-      """{"metric":"total","value":89.545,"unit":"sec","n_queries":129,""" +
-        """"queries":{"c01_decode_dump":0.560,"q01_pricing_summary":0.653}""" +
-        ""","sf":"/root/testdata/sf0.1"}"""
-    val p1 = Bench.parsePrior(scalaFmt)
-    assert(p1("c01_decode_dump") == 0.560 && p1("q01_pricing_summary") == 0.653)
-    // the audit tool's compact json.dumps
-    val auditFmt =
-      """{"metric":"total","value":90.058,"unit":"sec","n_queries":130,""" +
-        """"queries":{"c01_decode_dump":0.56,"q60_rank_functions":0.513},""" +
-        """"sf":"/root/testdata/sf0.1"}"""
-    val p2 = Bench.parsePrior(auditFmt)
-    assert(p2("q60_rank_functions") == 0.513)
-    // non-query numeric keys never collide with query names; lookups
-    // are by query name only
-    assert(!p1.contains("metric"))
-    assert(Bench.parsePrior("") == Map.empty)
+  private val names = Seq("q02_b", "c01_a", "q01_a", "d01_a", "q10_c")
+
+  test("select: the full surface sorted; --family by prefix, --only by " +
+      "name; every unmatched name fails the run and is listed") {
+    assert(Bench.select(names, Nil) ==
+      Seq("c01_a", "d01_a", "q01_a", "q02_b", "q10_c"))
+    assert(Bench.select(names, Seq("--family=q,c")) ==
+      Seq("c01_a", "q01_a", "q02_b", "q10_c"))
+    assert(Bench.select(names, Seq("--only=q10_c, d01_a")) ==
+      Seq("d01_a", "q10_c"))
+    assert(Bench.select(names, Seq("--family=q", "--only=q01_a,q02_b")) ==
+      Seq("q01_a", "q02_b"))
+    def failure(args: String*): String =
+      intercept[IllegalArgumentException](Bench.select(names, args)).getMessage
+    // a run that would publish n_queries 0 and a total of 0 never starts
+    val m = failure("--family=q,x,zz", "--only=q01_a,q99_nope")
+    assert(m.endsWith("no query matches: x, zz, q99_nope"), m)
+    assert(failure("--family=c", "--only=q01_a").contains("no query"))
+    assert(failure("--only=").contains("no query"))
+    assert(failure("--famly=q").contains("--famly=q"))
   }
 
-  test("needsResample: ratio AND absolute floor, no prior means no resample") {
-    val prior = Map("q" -> 1.0, "tiny" -> 0.1)
-    assert(Bench.needsResample("q", 1.6, prior))      // 1.6x and +0.6s
-    assert(!Bench.needsResample("q", 1.4, prior))     // under the ratio
-    assert(!Bench.needsResample("q", 1.45, prior))    // still under
-    // ratio tripped but absolute drift under the 0.4s floor
-    assert(!Bench.needsResample("tiny", 0.3, prior))
-    assert(Bench.needsResample("tiny", 0.6, prior))   // 6x and +0.5s
-    assert(!Bench.needsResample("new_query", 9.9, prior)) // no prior
-    assert(!Bench.needsResample("q", -1.0, prior))    // failed query
-  }
-
-  test("reconcile keeps the min of in-run and isolation observations") {
-    val measured = Seq("a" -> 10.0, "b" -> 2.0, "c" -> 3.0)
-    val out = Bench.reconcile(measured,
-      Map("a" -> 1.5, "b" -> 21.9)).toMap
-    assert(out("a") == 1.5) // isolation quieter: burst hit the run
-    assert(out("b") == 2.0) // burst hit the ISOLATION pass: keep in-run
-    assert(out("c") == 3.0) // not resampled: untouched
-  }
-
-  test("fastPath: single sample only for prior-confirmed sub-threshold queries") {
-    val prior = Map("tiny" -> 0.2, "big" -> 2.0)
-    assert(Bench.fastPath("tiny", 0.25, prior))   // both under threshold
-    assert(!Bench.fastPath("tiny", 0.6, prior))   // sample too slow
-    assert(!Bench.fastPath("big", 0.3, prior))    // prior says not tiny
-    assert(!Bench.fastPath("new_query", 0.1, prior)) // no prior: confirm
-    assert(!Bench.fastPath("tiny", -1.0, prior))  // failed query
-    // fast-path values can never silently drift into resample range:
-    // a fastPath-accepted sample is within the needsResample floor
-    assert(!Bench.needsResample("tiny", Bench.FastPathSec, prior))
-  }
-
-  test("familyRepass: a family coherently past the drift bar after " +
-      "reconcile gets one more window; scattered or sub-K drift does " +
-      "not (round-15: d02/d04/d06/d09 drifted together on zero-diff " +
-      "code and the burst outlasted the per-query isolation pass)") {
-    val prior = Map("d02_minhash" -> 2.0, "d04_jaccard" -> 1.0,
-      "d06_clusters" -> 0.8, "d09_decontam" -> 0.8,
-      "q05_revenue" -> 0.6, "t07_trigrams" -> 0.5)
-    // four d-entries still >1.5x prior and >0.4s absolute → the whole
-    // drifted set of that family re-passes, nothing else
-    val hotFamily = Seq("d02_minhash" -> 7.4, "d04_jaccard" -> 4.4,
-      "d06_clusters" -> 1.8, "d09_decontam" -> 1.7,
-      "q05_revenue" -> 0.7, "t07_trigrams" -> 0.5)
-    assert(Bench.familyRepass(hotFamily, prior) ==
-      Seq("d02_minhash", "d04_jaccard", "d06_clusters", "d09_decontam"))
-    // two drifted members (< FamilyDriftK): not a family signal
-    val twoDrift = Seq("d02_minhash" -> 7.4, "d04_jaccard" -> 4.4,
-      "d06_clusters" -> 0.8, "d09_decontam" -> 0.8)
-    assert(Bench.familyRepass(twoDrift, prior).isEmpty)
-    // three drifted across THREE families: scattered, not coherent
-    val scattered = Seq("d02_minhash" -> 7.4, "q05_revenue" -> 2.4,
-      "t07_trigrams" -> 1.6)
-    assert(Bench.familyRepass(scattered, prior).isEmpty)
-    // settled values (post-reconcile) never re-pass
-    val settled = Seq("d02_minhash" -> 2.1, "d04_jaccard" -> 1.1,
-      "d06_clusters" -> 0.9, "d09_decontam" -> 0.8)
-    assert(Bench.familyRepass(settled, prior).isEmpty)
-  }
-
-  test("canaryVerdict: hot window iff a canary reads >2x its committed " +
-      "value; no prior or subset runs degrade to unknown, never to a " +
-      "false quiet") {
-    val committed = Map("t07_char_trigrams" -> 0.5,
-      "d02_minhash_pairs" -> 1.2, "q01_pricing_summary" -> 0.6)
-    // both canaries near their priors → quiet
-    val (r1, v1) = Bench.canaryVerdict(committed,
-      Map("t07_char_trigrams" -> 0.55, "d02_minhash_pairs" -> 1.1))
-    assert(v1 == "quiet" && math.abs(r1 - 1.1) < 1e-9)
-    // ONE hot canary is enough (max, not mean — the round-13 driver
-    // run had d02 at 2.1x while t07 sat quiet)
-    val (r2, v2) = Bench.canaryVerdict(committed,
-      Map("t07_char_trigrams" -> 0.5, "d02_minhash_pairs" -> 2.52))
-    assert(v2.startsWith("hot window") && r2 > 2.0, s"$r2 $v2")
-    // exactly 2.0x is NOT hot (mirrors bench_audit's strict >)
-    assert(Bench.canaryVerdict(committed,
-      Map("d02_minhash_pairs" -> 2.4))._2 == "quiet")
-    // no committed prior, or a subset run without the canaries
-    assert(Bench.canaryVerdict(Map.empty,
-      Map("t07_char_trigrams" -> 9.9)) == (-1.0, "unknown"))
-    assert(Bench.canaryVerdict(committed,
-      Map("q01_pricing_summary" -> 0.6)) == (-1.0, "unknown"))
-    // failed canary measurements (-1) never poison the ratio
-    assert(Bench.canaryVerdict(committed,
-      Map("t07_char_trigrams" -> -1.0)) == (-1.0, "unknown"))
-  }
-
-  test("telemetry fields ride in every artifact line (idle%, cpu " +
-      "frequency, canary verdict — the machine-state data the " +
-      "round-13 forensics had to reconstruct from git)") {
-    val frag = Bench.telemetryJson(3.2, 4.0, 87.5, 2.31, 2400000L,
-      2200000L, 2.13, "hot window (2.1x committed canary)")
-    for (f <- Seq("\"load_start\":", "\"load_end\":", "\"idle_pct\":",
-      "\"steal_pct\":", "\"freq_khz_start\":", "\"freq_khz_end\":",
-      "\"canary_ratio\":", "\"canary\":\"", "\"canary_prior\":"))
+  test("telemetry fields ride in every artifact line (load, idle%, " +
+      "steal%, cpu frequency) as data, with no verdict on the window") {
+    val frag = Bench.telemetryJson(3.2, 4.0, 87.5, 2.31, 2400000L, 2200000L)
+    for (f <- Seq("\"load_start\":3.2", "\"load_end\":4.0",
+      "\"idle_pct\":87.5", "\"steal_pct\":2.31", "\"freq_khz_start\":2400000",
+      "\"freq_khz_end\":2200000"))
       assert(frag.contains(f), s"missing $f in $frag")
-    assert(frag.contains("\"canary\":\"hot window"))
-    assert(frag.contains("\"canary_prior\":\"committed\""))
-    assert(Bench.telemetryJson(0, 0, 0, 0, 0, 0, 1.1, "quiet",
-      "rebased(t07_char_trigrams)")
-      .contains("\"canary_prior\":\"rebased(t07_char_trigrams)\""))
+    assert(frag.count(_ == ':') == 6, frag)
+    // the work totals sum the per-query records
+    assert(Bench.workJson(Seq(Work(jobs = 2, tasks = 5, jobSec = 0.25,
+      cpuSec = 1.5), Work(jobs = 1, tasks = 3, jobSec = 0.5))) ==
+      ""","work":{"jobs":3,"tasks":8,"job_s":0.750,"cpu_s":1.500}""")
     // /proc/stat parsing: idle = idle + iowait, steal = field 8,
     // total = user..steal (first 8)
     assert(Bench.parseProcStat(
@@ -149,64 +68,54 @@ class BenchHarnessSpec extends AnyFunSuite {
     assert(Bench.stealPct(None, Some((1L, 0L, 2L))) == -1.0)
     assert(Bench.idlePct(Some((1L, 0L, 2L)), Some((1L, 0L, 2L))) == -1.0)
     // the live samplers never throw, whatever the host exposes
-    Bench.procStat(); Bench.curFreqKhz(); ()
+    Bench.procStat(); Bench.curFreqKhz(); Bench.load1(); ()
   }
 
-  test("effectivePrior: the canary prior rebases to the machine state " +
-      "only when the last K windows AGREE within the band while ALL " +
-      "past the hot bar — a burst, a short history, or a quiet host " +
-      "keeps the committed prior (round-14 verdict item 1: the " +
-      "verdict must keep separating windows when the host moves)") {
-    val committed = Map("t07_char_trigrams" -> 0.2,
-      "d02_minhash_pairs" -> 1.0)
-    def w(vs: Double*): Seq[Map[String, Double]] =
-      vs.map(v => Map("t07_char_trigrams" -> v))
-    // adopt: 3 agreeing windows, all >2x committed → median, that
-    // canary only; the other keeps its committed value
-    val (eff, reb) = Bench.effectivePrior(committed, w(0.50, 0.54, 0.52))
-    assert(reb == Seq("t07_char_trigrams"))
-    assert(eff("t07_char_trigrams") == 0.52)
-    assert(eff("d02_minhash_pairs") == 1.0)
-    // refuse: only two windows yet
-    assert(Bench.effectivePrior(committed, w(0.50, 0.54))._2.isEmpty)
-    // refuse: windows disagree beyond the band (burst, not a state)
-    assert(Bench.effectivePrior(committed, w(0.50, 0.90, 0.52))._2.isEmpty)
-    // refuse: agreeing but not past the hot bar (nothing to fix)
-    assert(Bench.effectivePrior(committed, w(0.30, 0.31, 0.32))._2.isEmpty)
-    // only the TRAILING K windows decide: a host that returns to the
-    // committed state dissolves the rebase
-    assert(Bench.effectivePrior(committed,
-      w(0.50, 0.54, 0.52, 0.21, 0.20, 0.22))._2.isEmpty)
-    // the verdict downstream: machine-state window reads quiet against
-    // the adopted prior, a genuinely hot window still reads hot
-    assert(Bench.canaryVerdict(eff,
-      Map("t07_char_trigrams" -> 0.55))._2 == "quiet")
-    assert(Bench.canaryVerdict(eff,
-      Map("t07_char_trigrams" -> 1.2))._2.startsWith("hot window"))
-    // failed observations (-1) never count as windows
-    assert(Bench.effectivePrior(committed,
-      w(-1.0, 0.52, 0.54))._2.isEmpty)
+  private def session(): SparkSession = SparkSession.builder()
+    .master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  test("probe: a tagged groupBy records its jobs, tasks and shuffle " +
+      "bytes under its tag; an idle tag records nothing") {
+    val spark = session()
+    val probe = Probe.install(spark)
+    try {
+      val n = Probe.tagged(spark, "A") {
+        spark.range(1000).groupBy(col("id") % 7).count().collect().length
+      }
+      assert(n == 7)
+      spark.range(10).count() // untagged: summed under _untagged
+    } finally spark.stop()
+    val a = probe.record("A")
+    assert(a.jobs >= 1 && a.stages >= 1 && a.tasks >= 1, a)
+    assert(a.shuffleBytes > 0 && a.jobSec >= 0 && a.cpuSec > 0, a)
+    assert(a.triggers == 0, a)
+    assert(probe.record("B") == Work())
+    assert(probe.record(Probe.Untagged).jobs >= 1)
   }
 
-  test("provenanceJson: reconciled artifacts say so; single-window " +
-      "artifacts carry no provenance fields (round-14 verdict item " +
-      "2: min-reconciled values must not wear one window's verdict)") {
-    assert(Bench.provenanceJson(1) == "")
-    assert(Bench.provenanceJson(0) == "")
-    assert(Bench.provenanceJson(2) ==
-      ""","reconciled":true,"n_windows":2""")
-  }
-
-  test("bench_audit selftest: committed-prior diffing, drift band, and " +
-      "load-canary refusal logic hold (the round-12 procedural lesson, " +
-      "mechanized — a burst-poisoned full run must be refused, not " +
-      "spliced into)") {
-    val p = new ProcessBuilder("python3", "tools/bench_audit.py",
-      "--selftest")
-    p.redirectErrorStream(true)
-    val proc = p.start()
-    val out = new String(proc.getInputStream.readAllBytes())
-    assert(proc.waitFor() == 0, s"selftest failed:\n$out")
-    assert(out.contains("selftest OK"))
+  test("probe: a tagged stateful stream records its triggers and state " +
+      "rows under the tag that started it") {
+    val spark = session()
+    val probe = Probe.install(spark)
+    try {
+      implicit val sqlCtx = spark.sqlContext
+      import spark.implicits._
+      val input = MemoryStream[Int]
+      input.addData(1, 2, 3, 1)
+      val q = Probe.tagged(spark, "S") {
+        input.toDF().groupBy($"value").count()
+          .writeStream.format("memory").queryName("probe_counts")
+          .outputMode("complete").start()
+      }
+      try q.processAllAvailable() finally q.stop()
+      assert(spark.table("probe_counts").count() == 3)
+    } finally spark.stop()
+    val s = probe.record("S")
+    assert(s.triggers >= 1 && s.triggerSec > 0, s)
+    assert(s.stateRows > 0, s)
+    assert(s.jobs >= 1 && s.tasks >= 1, s) // the micro-batch's own jobs
   }
 }
