@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.util.Fs
+import graft.util.{Fs, SessionMemo}
 import graft.util.Fs.{deleteRecursively, withListing}
 
 /** Thrown when a commit loses the version CAS (or a bucket-dir
@@ -36,41 +36,20 @@ object CdcTable {
     * reads the parquet bytes fresh from disk; what the memo removes is
     * the per-read DRIVER cost — one file listing, plus one distributed
     * mergeSchema footer-inference job for an inferred read — that
-    * every stateAt/changeFeed resolve was re-paying (guide §5 driver
-    * work, §6 I/O; the c-family lifecycle gates resolve the same
-    * immutable versions dozens of times per run, and at 100 TB a
-    * follower folding a commit log pays this once per version per
-    * consumer). Bounded: entries of stopped sessions are purged on
-    * every read (they can never hit again, and their plans pin a dead
-    * context), and once [[RelationCacheMax]] live entries are held a
-    * new read is served uncached — a live session's entry is never
-    * evicted (values are plans, not data — the bound is about key
-    * accumulation in long-lived multi-session JVMs like the test
-    * runner). */
-  private[graft] val RelationCacheMax = 512
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Seq[(String, Long)]), DataFrame]()
+    * every stateAt/changeFeed resolve was re-paying (the c-family
+    * lifecycle gates resolve the same immutable versions dozens of
+    * times per run, and a follower folding a commit log pays this once
+    * per version per consumer). */
+  private[graft] val relations =
+    new SessionMemo[(String, Seq[(String, Long)]), DataFrame]
   private def mtimeOf(p: String): Option[Long] =
     try Some(Files.getLastModifiedTime(Paths.get(p)).toMillis)
     catch { case _: Exception => None }
   private[graft] def cachedRead(spark: SparkSession, paths: Seq[String],
       schema: String = "")(mk: => DataFrame): DataFrame = {
-    relationCache.keySet.removeIf(_._1.sparkContext.isStopped)
     val stamps = paths.map(mtimeOf)
     if (stamps.contains(None)) mk
-    else {
-      val key = (spark, schema, paths.zip(stamps.flatten))
-      Option(relationCache.get(key)).getOrElse(
-        if (relationCache.size >= RelationCacheMax) mk
-        else relationCache.computeIfAbsent(key, _ => mk))
-    }
-  }
-
-  /** The sessions keying the memo's entries, one per entry. */
-  private[graft] def relationCacheSessions: Seq[SparkSession] = {
-    import scala.jdk.CollectionConverters._
-    relationCache.keySet.asScala.toSeq.map(_._1)
+    else relations(spark, (schema, paths.zip(stamps.flatten)))(mk)
   }
 }
 

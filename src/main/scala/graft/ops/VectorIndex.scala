@@ -1,10 +1,13 @@
 package graft.ops
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.functions.Vectors
+import graft.util.Fs
 
 /** Build/serve separation for the IVF+PQ index — the production ANN
   * shape [[Similarity.ivfPqTopK]] computes in-memory, persisted so a
@@ -74,7 +77,7 @@ object VectorIndex {
     // the caller's corpus is authoritative (same contract as reindex):
     // tombstones left over from a previous index life would otherwise
     // kill the fresh generation-0 cells
-    rmRec(new java.io.File(s"$dir/tombstones"))
+    Fs.deleteRecursively(Paths.get(s"$dir/tombstones"))
   }
 
   /** Highest append generation present in the cell files. Derived
@@ -271,7 +274,7 @@ object VectorIndex {
       gen = 0L)
     // the caller's corpus is authoritative: pre-rewrite tombstones
     // must not hide rows of the fresh generation-0 cells
-    rmRec(new java.io.File(s"$dir/tombstones"))
+    Fs.deleteRecursively(Paths.get(s"$dir/tombstones"))
   }
 
   /** Tombstone-delete ids from the index: O(delete batch) — one tiny
@@ -301,18 +304,6 @@ object VectorIndex {
     if (!new java.io.File(s"$dir/tombstones").exists()) None
     else Some(spark.read.parquet(s"$dir/tombstones"))
 
-  /** Fold the tombstones into the cell files: rewrite the cells
-    * WITHOUT the deleted rows — assignments are already stored, so
-    * this is a filtered copy under the frozen quantizers (no
-    * re-assignment, no retraining) — then drop the sidecar. Staged
-    * rewrite + directory swap; single-writer maintenance op like
-    * [[build]]/[[reindex]] (the versioned-manifest discipline lives
-    * in CdcTable — an index is rebuilt-from-source on loss, not
-    * recovered). */
-  private def rmRec(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmRec)); f.delete(); ()
-  }
-
   /** Drop every cell row some tombstone covers: same id AND appended
     * at or before the tombstone's recorded generation. Still a
     * broadcast anti-join keyed on id — the generation bound rides as
@@ -326,11 +317,19 @@ object VectorIndex {
       "left_anti")
   }
 
+  /** Fold the tombstones into the cell files: rewrite the cells
+    * WITHOUT the deleted rows — assignments are already stored, so
+    * this is a filtered copy under the frozen quantizers (no
+    * re-assignment, no retraining) — then drop the sidecar. Staged
+    * rewrite + directory swap; single-writer maintenance op like
+    * [[build]]/[[reindex]] (the versioned-manifest discipline lives
+    * in CdcTable — an index is rebuilt-from-source on loss, not
+    * recovered). */
   def compact(spark: SparkSession, dir: String): Unit =
     tombstones(spark, dir).foreach { t =>
       // a crashed previous compaction may have left its staging dir
       // behind; readCells below restores an orphaned cells_old
-      rmRec(new java.io.File(s"$dir/cells_compacting"))
+      Fs.deleteRecursively(Paths.get(s"$dir/cells_compacting"))
       val live = killTombstoned(readCells(spark, dir), t)
       val cols = live.columns.filter(_ != "cid").map(col) // cid last:
       live.select(cols :+ col("cid"): _*)                 // partition col
@@ -341,15 +340,15 @@ object VectorIndex {
       // compacted one is in place — a crash anywhere in this window
       // loses at most the compaction, never the index (cells_old is
       // restored above on the next attempt; tombstones still pending)
-      rmRec(new java.io.File(s"$dir/cells_old"))
+      Fs.deleteRecursively(Paths.get(s"$dir/cells_old"))
       java.nio.file.Files.move(
         java.nio.file.Paths.get(s"$dir/cells"),
         java.nio.file.Paths.get(s"$dir/cells_old"))
       java.nio.file.Files.move(
         java.nio.file.Paths.get(s"$dir/cells_compacting"),
         java.nio.file.Paths.get(s"$dir/cells"))
-      rmRec(new java.io.File(s"$dir/cells_old"))
-      rmRec(new java.io.File(s"$dir/tombstones"))
+      Fs.deleteRecursively(Paths.get(s"$dir/cells_old"))
+      Fs.deleteRecursively(Paths.get(s"$dir/tombstones"))
     }
 
   /** Cell-balance report (cid, n_vectors) — the reindex/rebuild

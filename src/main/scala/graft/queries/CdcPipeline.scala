@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cdc.{Apply, CdcTable, Decode}
+import graft.util.{Fs, SessionMemo}
 import graft.util.Tables.load
 
 /** CDC pipeline surface as driver-checkable queries:
@@ -28,35 +29,42 @@ object CdcPipeline {
 
   private def replayFiles = graft.sources.DatastreamFixtures.files
 
-  // One shared fixture replay per session: the sequential-merge
-  // capability runs EXACTLY ONCE per session (fresh in every session
-  // Verify or Bench spins up) and every query over its outcome — c02's
-  // final-state oracle gate, c10 time travel, c11 change feed — reads
-  // the committed table. The merge path additionally stays fresh-per-
-  // run through c16, which replays the same fixtures through the REAL
-  // readStream→foreachBatch→checkpoint path uncached, so memoizing
-  // here trades no gate coverage for the ~1.5 s/query scheduling
-  // floor the per-query replays were paying (5 batches × discovery +
-  // partitioned write each).
-  private val replayCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val jsonFixtureCache =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
-  private val fleetCache = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, graft.streaming.CdcRouter]()
+  // The fixture replay, once per session: every query over its outcome
+  // (c02's final state, c10 time travel, c11 change feed, ...) reads
+  // the committed table. The merge path itself stays fresh through
+  // c16, which replays the same fixtures through the real
+  // readStream → foreachBatch → checkpoint path.
+  private[graft] val replays = new SessionMemo[Unit, String]
   private def replayedTable(s: SparkSession): CdcTable = {
-    val dir = replayCache.computeIfAbsent(s, _ => {
+    val dir = replays(s, ()) {
       val d = java.nio.file.Files.createTempDirectory("graft-replay").toString
       val t = new CdcTable(s, d, Seq("EMPLOYEE_ID"))
       replayFiles.zipWithIndex.foreach { case (f, i) =>
         t.applyBatch(Decode.fromAvro(s, s"$fixtures/$f"), i.toLong)
       }
       d
-    })
+    }
     new CdcTable(s, dir, Seq("EMPLOYEE_ID"))
   }
+
+  // The events table merged and range-clustered by value, shared by
+  // c13's stat-pruned scan and c14's bucket lookup: the scan and the
+  // lookup are the claims and run fresh.
+  private val clustered = new SessionMemo[String, String]
+  private def clusteredEvents(s: SparkSession, d: String): CdcTable = {
+    val dir = clustered(s, d) {
+      val p = java.nio.file.Files.createTempDirectory("graft-cluster").toString
+      val t = new CdcTable(s, p, Seq("user_id"), numBuckets = 8)
+      t.applyBatch(eventsAsChanges(s, d), 0L)
+      t.clusterBy("value", filesPerBucket = 4)
+      p
+    }
+    new CdcTable(s, dir, Seq("user_id"), numBuckets = 8)
+  }
+
+  // c15's JSON wire copy of the c07 fixture events: the JSON decode is
+  // the claim and runs fresh.
+  private val jsonWire = new SessionMemo[Unit, String]
 
   /** events table lifted into the engine's change-event shape. */
   private def eventsAsChanges(s: SparkSession, d: String): DataFrame = {
@@ -127,9 +135,9 @@ object CdcPipeline {
     // stream split across two tables by a per-event table key, full
     // replay (snapshot + CDC + PK-update + delete), both tables'
     // final states dumped with their table tag. The replay is the
-    // shared once-per-session consolidated fixture c25/c26 also read
-    // (see the replayCache note); c09 reads it through the router's
-    // own read API, c25 through the store it merges into
+    // shared consolidated fixture c25/c26 also read ([[fleetRouter]]);
+    // c09 reads it through the router's own read API, c25 through the
+    // store it merges into
     "c09_router_multiplex" -> { (s, _) =>
       val r = fleetRouter(s)
       fleetStates(s, r.knownTables.map(t => t -> r.stateOf(t).get))
@@ -229,11 +237,9 @@ object CdcPipeline {
               "refusing to emit a partial aggregate")
         }
       } finally {
-        // per-invocation temp checkpoint — reap it (the p05 lesson)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(ckpt))
+        // per-invocation temp checkpoint: stop the follower, then reap it
+        q.stop()
+        Fs.deleteRecursively(java.nio.file.Paths.get(ckpt))
       }
       val (n, sm) = state.get()
       Seq((n, sm.doubleValue)).toDF("n_live", "sum_salary")
@@ -291,17 +297,7 @@ object CdcPipeline {
     // the skip rate; this query gates the RESULT against DuckDB)
     "c13_clustered_scan" -> { (s, d) =>
       import s.implicits._
-      // merge + clusterBy are deterministic setup (the same memoization
-      // as c10/c11's fixture replay); the stat-pruned scan is the
-      // capability under test and runs fresh each time
-      val dir = clusterCache.computeIfAbsent((s, d), _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-cluster").toString
-        val t = new CdcTable(s, p, Seq("user_id"), numBuckets = 8)
-        t.applyBatch(eventsAsChanges(s, d), 0L)
-        t.clusterBy("value", filesPerBucket = 4)
-        p
-      })
-      new CdcTable(s, dir, Seq("user_id"), numBuckets = 8)
+      clusteredEvents(s, d)
         .scanWhere("value", BigDecimal(100), BigDecimal(200)).get
         .select($"user_id", $"event_type", $"value",
           $"_sort_key.ts_ms".as("ts_us"))
@@ -312,16 +308,8 @@ object CdcPipeline {
     // (DataSkippingSpec asserts the pruning; this gates the RESULT)
     "c14_bucket_lookup" -> { (s, d) =>
       import s.implicits._
-      val dir = clusterCache.computeIfAbsent((s, d), _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-cluster").toString
-        val t = new CdcTable(s, p, Seq("user_id"), numBuckets = 8)
-        t.applyBatch(eventsAsChanges(s, d), 0L)
-        t.clusterBy("value", filesPerBucket = 4)
-        p
-      })
       val keys = Seq(1L, 2L, 3L, 5L, 8L, 13L, 21L).toDF("user_id")
-      new CdcTable(s, dir, Seq("user_id"), numBuckets = 8)
-        .lookup(keys).get
+      clusteredEvents(s, d).lookup(keys).get
         .select($"user_id", $"event_type", $"value",
           $"_sort_key.ts_ms".as("ts_us"))
         .orderBy($"user_id")
@@ -346,14 +334,14 @@ object CdcPipeline {
     "c15_json_decode" -> { (s, _) =>
       import s.implicits._
       import graft.sources.{DatastreamAvro, DatastreamJson}
-      val jsonDir = jsonFixtureCache.computeIfAbsent(s, _ => {
+      val jsonDir = jsonWire(s, ()) {
         val d = java.nio.file.Files.createTempDirectory("graft-jsonwire")
         DatastreamAvro.read(s,
             s"$fixtures/{insert,update,delete,update-pk}.avro")
           .drop(DatastreamAvro.FilePathCol)
           .write.mode("overwrite").json(s"$d/events")
         s"$d/events"
-      })
+      }
       val schema = DatastreamAvro.sparkSchema(s"$fixtures/insert.avro")
       // read the directory, not a *.json glob: Spark probes glob paths
       // for FileStreamSink metadata and WARNs a FileNotFoundException
@@ -574,10 +562,8 @@ object CdcPipeline {
               "120 s; refusing to emit a partial gate")
         }
       } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(ckpt))
+        q.stop()
+        Fs.deleteRecursively(java.nio.file.Paths.get(ckpt))
       }
       val (n, sm) = state.get()
       Seq((nVersions.get(), nCheckDiff.get(), n, sm.doubleValue))
@@ -640,9 +626,10 @@ object CdcPipeline {
         (Long, java.math.BigDecimal)] = null
       var mart2: graft.streaming.DurableMart[
         (Long, java.math.BigDecimal)] = null
+      var q1, q2: org.apache.spark.sql.streaming.StreamingQuery = null
       try {
         mart1 = mkMart()
-        val q1 = graft.streaming.CdfFollow.runStoreDurable(s, store,
+        q1 = graft.streaming.CdfFollow.runStoreDurable(s, store,
           ckpt, mart1, fold(kill = true))
         val died =
           try { if (!q1.awaitTermination(120000)) q1.stop(); false }
@@ -659,7 +646,7 @@ object CdcPipeline {
         // watermark re-delivers everything past the marker
         mart2 = mkMart()
         val resumedFrom = mart2.version
-        val q2 = graft.streaming.CdfFollow.runStoreDurable(s, store,
+        q2 = graft.streaming.CdfFollow.runStoreDurable(s, store,
           ckpt, mart2, fold(kill = false))
         if (!q2.awaitTermination(120000)) {
           q2.stop()
@@ -686,23 +673,23 @@ object CdcPipeline {
           .toDF("killed_at_version", "resumed_from", "head_check_diff",
             "n_live", "sum_salary")
       } finally {
+        Seq(q1, q2).filter(_ != null).foreach(_.stop())
         if (mart1 != null) mart1.close()
         if (mart2 != null) mart2.close()
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(ckpt)); rm(new java.io.File(martDir))
+        Seq(ckpt, martDir).foreach(p =>
+          Fs.deleteRecursively(java.nio.file.Paths.get(p)))
       }
     }
   )
 
-  /** One multiplexed fleet replay per session (the c09/c25/c26
-    * shared fixture): the fixtures split across EMP_EVEN/EMP_ODD and
-    * routed into the consolidated layout — segment files shared by
-    * both tables, ONE fleet-wide CAS per batch (the 2,048+-table
-    * physics). */
+  /** The multiplexed fleet replay shared by c09 and c25-c28: the
+    * fixtures split across EMP_EVEN/EMP_ODD and routed into the
+    * consolidated layout — segment files shared by both tables, ONE
+    * fleet-wide CAS per batch. The reads and followers over it are the
+    * claims. */
+  private val fleets = new SessionMemo[Unit, graft.streaming.CdcRouter]
   private def fleetRouter(s: SparkSession): graft.streaming.CdcRouter =
-    fleetCache.computeIfAbsent(s, _ => {
+    fleets(s, ()) {
       import s.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft-cstore")
       val r = new graft.streaming.CdcRouter(s, dir.toString,
@@ -716,7 +703,7 @@ object CdcPipeline {
           r.applyBatch(e, i.toLong)
       }
       r
-    })
+    }
 
   /** Per-table states as one frame, tagged with the table name. */
   private def fleetStates(s: SparkSession,

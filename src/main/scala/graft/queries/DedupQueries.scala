@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{Dedup, Similarity}
+import graft.util.{Fs, SessionMemo}
 import graft.util.Tables.load
 
 /** Deduplication surface (d01-d05) over documents/embeddings.
@@ -17,83 +18,53 @@ import graft.util.Tables.load
   */
 object DedupQueries {
 
-  /** Session-memoized corpus-internal near-dup pair relation at the
-    * production 0.8 threshold — the INPUT six downstream operators
-    * consume (d06 clusters, d12 leakage split, d20 weights, d21 hub
-    * prune, d24 PageRank, d25 canonical pick), each of which was
-    * re-shingling and re-banding the whole corpus per bench sample.
-    * Deterministic shared setup in the c02/index-fixture memoization
-    * class; `d02_minhash_pairs` stays fresh-computed — the pair
-    * relation ITSELF is d02's oracled claim. Checkpointed: the pair
-    * list is output-sized (bounded by real near-dup density), tiny
-    * next to the banded join that produces it. */
-  private val pairsCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
+  /** The corpus-internal near-dup pair relation at the production 0.8
+    * threshold, the input of six downstream operators (d06 clusters,
+    * d12 leakage split, d20 weights, d21 hub prune, d24 PageRank, d25
+    * canonical pick). `d02_minhash_pairs` stays fresh: the pair
+    * relation itself is d02's oracled claim. Checkpointed: the pair
+    * list is output-sized, tiny next to the banded join behind it. */
+  private val pairsMemo = new SessionMemo[String, DataFrame]
   private def sharedPairs(s: SparkSession, d: String): DataFrame =
-    pairsCache.computeIfAbsent((s, d), _ =>
+    pairsMemo(s, d)(
       Dedup.minhashPairs(load(s, d, "documents"), "doc_id", "text",
         threshold = 0.8).localCheckpoint(true))
 
-  /** Session-memoized CC labels over [[sharedPairs]] — the cluster
-    * relation four downstream operators consume (d07 canonical pick,
-    * d12 leakage split, d20 weights, d25 rank pick), each of which
-    * was re-running the label-propagation loop (2–3 driver rounds,
-    * each a join + aggregate job) per bench sample over the exact
-    * same pair relation. `d06_dup_clusters` stays fresh-computed —
-    * the clustering ITSELF is d06's oracled claim. Deterministic
-    * (min-label propagation is partitioning-independent), so sharing
-    * cannot change any consumer's rows. Checkpointed: one row per
-    * clustered doc, output-sized. */
-  private val clustersCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      DataFrame]()
+  /** CC labels over [[sharedPairs]], consumed by d07, d12, d20 and d25
+    * (each was re-running the 2-3 round label-propagation loop).
+    * `d06_dup_clusters` stays fresh: the clustering itself is d06's
+    * oracled claim. Min-label propagation is partitioning-independent,
+    * so sharing cannot change any consumer's rows. */
+  private val clustersMemo = new SessionMemo[String, DataFrame]
   private def sharedClusters(s: SparkSession, d: String): DataFrame =
-    clustersCache.computeIfAbsent((s, d), _ =>
+    clustersMemo(s, d)(
       Dedup.connectedComponents(sharedPairs(s, d)).localCheckpoint(true))
 
-  /** Session-memoized [[Dedup.nearDupRank]] (iters = 6, the d24/d25
-    * parameterization) over [[sharedPairs]] — the 6-round power
-    * iteration is ~14 chained join/aggregate stages; d25 consumed an
-    * identical relation to the one d24 derives, re-running the loop
-    * per bench sample. `d24_pair_rank` stays fresh-computed — the
-    * rank relation ITSELF is d24's oracled claim; d25 (canonical
-    * pick) consumes. Deterministic: decimal-summed contributions are
-    * partitioning-order-insensitive by construction. */
-  private val rankCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Int),
-      DataFrame]()
-  // keyed on iters too (round-15 verdict item 4): a future consumer
-  // with a different iteration count gets its own relation instead of
-  // silently sharing the 6-round one
+  /** [[Dedup.nearDupRank]] over [[sharedPairs]], keyed on `iters` too
+    * so a consumer with another iteration count gets its own relation.
+    * `d24_pair_rank` stays fresh: the rank relation itself is d24's
+    * oracled claim; d25 consumes it. Decimal-summed contributions make
+    * it partitioning-order-insensitive. */
+  private val rankMemo = new SessionMemo[(String, Int), DataFrame]
   private def sharedRank(s: SparkSession, d: String,
       iters: Int = 6): DataFrame =
-    rankCache.computeIfAbsent((s, d, iters), _ =>
+    rankMemo(s, (d, iters))(
       Dedup.nearDupRank(load(s, d, "documents"), "doc_id",
         sharedPairs(s, d), iters = iters).localCheckpoint(true))
 
-  /** Session-memoized PERSISTED near-dup index (members/ + buckets/)
-    * — the artifact the d19 ingest loop maintains at 100 TB, shared
-    * read-only by every pair consumer that derives from it (d11
-    * cluster sizes, m06 crossmodal check) instead of each rebuilding
-    * it per bench sample. Same memoization class as [[sharedPairs]];
-    * d19 itself still builds through its own streamed ingest loop —
-    * the loop IS its claim. */
-  private val ndIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      String]()
+  /** The persisted near-dup index (members/ + buckets/), read-only for
+    * d11 and m06. d19 still builds its own through the streamed ingest
+    * loop: the loop is its claim. */
+  private val ndIndexMemo = new SessionMemo[String, String]
   private[queries] def nearDupIndexFixture(s: SparkSession,
       d: String): String =
-    ndIndexCache.computeIfAbsent((s, d), _ => {
+    ndIndexMemo(s, d) {
       val dir = s"target/nd_index_fix_${math.abs(d.hashCode.toLong)}"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
+      Fs.deleteRecursively(java.nio.file.Paths.get(dir))
       Dedup.buildNearDupIndex(load(s, d, "documents"), "doc_id", "text",
         dir)
       dir
-    })
+    }
 
   // single-line: embedded into stripMargin'd SQL, so no leading "||"
   private val shingleSql =

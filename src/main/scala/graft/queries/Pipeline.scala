@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.ops.{Sampling, TextAnalysis}
 import graft.ops.TextAnalysis._
+import graft.util.{Fs, SessionMemo}
 import graft.util.Tables.load
 
 /** The end-to-end training-data build, composed from the operators the
@@ -48,22 +49,16 @@ object Pipeline {
       java.util.Collections.singletonList(rows(0)), st.schema)
   }
 
-  /** Memoized three-commit CDC documents table for c24 (v0 snapshot =
-    * the 90% base split, v1 re-texts as update pre/post images, v2
-    * deletes + held-out inserts): deterministic setup in the c21
-    * memoization class — the gate's claims (feed folding, per-version
+  /** Three-commit CDC documents table for c24 (v0 snapshot = the 90%
+    * base split, v1 re-texts as update pre/post images, v2 deletes +
+    * held-out inserts). The gate's claims (feed folding, per-version
     * retrain equivalence) run inside the gate. */
-  private val c24Cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
-      String]()
+  private val c24Memo = new SessionMemo[String, String]
   private def c24Table(s: SparkSession, d: String): graft.cdc.CdcTable = {
-    val tdir = c24Cache.computeIfAbsent((s, d), _ => {
+    val tdir = c24Memo(s, d) {
       import s.implicits._
       val dir = s"target/cdcdocs_${math.abs(d.hashCode.toLong)}"
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
+      Fs.deleteRecursively(java.nio.file.Paths.get(dir))
       val docs = load(s, d, "documents").select($"doc_id", $"text", $"lang")
       def key(seq: Long) = struct(lit(seq).as("ts_ms"), lit(seq).as("scn"),
         lit("").as("rs_id"), lit(0L).as("ssn")).as("sort_key")
@@ -85,7 +80,7 @@ object Pipeline {
               lit("INSERT").as("op"), key(2))),
         2L)
       dir
-    })
+    }
     new graft.cdc.CdcTable(s, tdir, Seq("doc_id"), numBuckets = 4)
   }
 
@@ -331,11 +326,9 @@ object Pipeline {
       }.getPath + "/model"
       val model = NbClassifier.load(s, mdir)
 
-      def rmRec(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rmRec)); f.delete(); ()
-      }
       val outDir = s"target/p05_scored_$tag"
-      rmRec(new java.io.File(outDir)) // append sink: never accumulate runs
+      // append sink: never accumulate runs
+      Fs.deleteRecursively(java.nio.file.Paths.get(outDir))
       val ckDir = java.nio.file.Files.createTempDirectory(
         java.nio.file.Paths.get("target"), "p05ck").toString
       val prev = s.conf.get("spark.sql.shuffle.partitions")
@@ -356,9 +349,10 @@ object Pipeline {
         try q.processAllAvailable() finally q.stop()
       } finally {
         s.conf.set("spark.sql.shuffle.partitions", prev)
-        // a fresh temp checkpoint is created per invocation — reap it
-        // here or bench runs accumulate dead p05ck* dirs
-        rmRec(new java.io.File(ckDir))
+        // a fresh temp checkpoint is created per invocation (the stream
+        // stopped above) — reap it here or bench runs accumulate dead
+        // p05ck* dirs
+        Fs.deleteRecursively(java.nio.file.Paths.get(ckDir))
       }
       s.read.parquet(outDir)
         .dropDuplicates("id")
@@ -439,9 +433,8 @@ object Pipeline {
       val pred = $"lang" === "en"
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft-c24-ckpt").toString
-      // the three-commit table is deterministic setup, memoized per
-      // session (the c21 precedent); the follower checkpoint is fresh
-      // per invocation — the feed-folding loop is the claim
+      // the follower checkpoint is fresh per invocation: the
+      // feed-folding loop is the claim
       val t = c24Table(s, d)
 
       // bootstrap from the v0 snapshot, then follow the tail — the
@@ -498,11 +491,9 @@ object Pipeline {
               "refusing to emit a partial gate")
         }
       } finally {
-        // per-invocation temp checkpoint — reap it (the p05 lesson)
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(ckpt))
+        // per-invocation temp checkpoint: stop the follower, then reap it
+        q.stop()
+        Fs.deleteRecursively(java.nio.file.Paths.get(ckpt))
       }
       modelRef.get()._2
         .select($"n_tgt", $"n_oth", $"v", $"nd_tgt", $"nd_all")

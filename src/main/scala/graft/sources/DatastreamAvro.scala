@@ -129,12 +129,14 @@ object DatastreamAvro {
     * `maxFileAge` bound below keeps the seen-files map, not the
     * listing, bounded.
     *
-    * Zero-length blobs are dropped before decode (see [[read]]).
+    * Zero-length blobs are dropped at listing, never read (see
+    * [[read]]).
     *
     * @param pathFilter    as in [[read]]: excluded files are never
     *        avro-decoded
     * @param modifiedAfter fresh-start listing lower bound: files whose
-    *        modification time is at or before the cutoff are excluded —
+    *        modification time is at or before the cutoff are never
+    *        listed, so never read (the source's `modifiedAfter` option) —
     *        the analog of the reference's `startOffset = source time −
     *        3-day SLA` prune (DatastreamEventReader.java:471-478).
     *        Deterministic against the file-log: already-committed files
@@ -151,10 +153,9 @@ object DatastreamAvro {
       maxFileAge: Option[String] = None): DataFrame = {
     val reader = spark.readStream.format(classOf[DatastreamFileSource].getName)
     maxFileAge.foreach(a => reader.option("maxFileAge", a))
-    val listed = reader.load(pathGlob).filter(col("length") > 0)
-    val bounded = modifiedAfter.fold(listed)(t =>
-      listed.filter(col("modificationTime") > lit(t)))
-    val binary = pathFilter.fold(bounded)(bounded.filter)
+    modifiedAfter.foreach(t => reader.option("modifiedAfter", t.getTime))
+    val listed = reader.load(pathGlob)
+    val binary = pathFilter.fold(listed)(listed.filter)
       .select(col("path"), col("content"))
     decodeBinary(spark, binary, schema)
   }

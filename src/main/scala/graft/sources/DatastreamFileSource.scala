@@ -44,7 +44,13 @@ import org.apache.spark.util.SerializableConfiguration
   * `<checkpoint>/sources/<n>` (entries `path`, `timestamp`, `batchId`,
   * compacted by Spark), offsets are `{"logOffset":N}`, and seen files
   * are a `SeenFilesMap` bounded by the `maxFileAge` option (default 7
-  * days), rebuilt from the log on restart. A checkpoint of Spark's
+  * days), rebuilt from the log on restart.
+  *
+  * The listing drops zero-length files (folder markers, in-flight
+  * blobs) and, with the `modifiedAfter` option (epoch milliseconds),
+  * files modified at or before that cutoff: neither is logged nor
+  * read. A zero-length file is not marked seen, so a blob that gains
+  * its content later is planned then. A checkpoint of Spark's
   * `binaryFile` stream source over the same glob resumes here. A
   * batch's files are packed into tasks as Spark's file scans pack them
   * (`FilePartition.getFilePartitions`: `maxPartitionBytes`,
@@ -59,8 +65,15 @@ class DatastreamFileSource extends TableProvider {
     val glob = Option(properties.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "DatastreamFileSource requires .load(pathGlob)"))
-    val maxFileAgeMs = new FileStreamOptions(properties.asScala.toMap).maxFileAgeMs
-    new DatastreamFileTable(glob, maxFileAgeMs)
+    // Spark's file stream options refuse `modifiedAfter`; this source
+    // applies it at listing
+    val (after, rest) = properties.asScala.toMap
+      .partition(_._1.equalsIgnoreCase("modifiedAfter"))
+    val maxFileAgeMs = new FileStreamOptions(rest).maxFileAgeMs
+    val modifiedAfterMs = after.values.headOption.map(v =>
+      v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"DatastreamFileSource: modifiedAfter is epoch milliseconds, got '$v'")))
+    new DatastreamFileTable(glob, maxFileAgeMs, modifiedAfterMs)
   }
 }
 
@@ -102,8 +115,8 @@ object DatastreamFileSource {
   }
 }
 
-private[sources] class DatastreamFileTable(glob: String, maxFileAgeMs: Long)
-    extends Table with SupportsRead {
+private[sources] class DatastreamFileTable(glob: String, maxFileAgeMs: Long,
+    modifiedAfterMs: Option[Long]) extends Table with SupportsRead {
 
   override def name(): String = s"datastream-files($glob)"
   override def schema(): StructType = DatastreamFileSource.Schema
@@ -116,14 +129,14 @@ private[sources] class DatastreamFileTable(glob: String, maxFileAgeMs: Long)
       override def readSchema(): StructType = DatastreamFileSource.Schema
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
         new DatastreamFileStream(SparkSession.active, glob, checkpointLocation,
-          maxFileAgeMs)
+          maxFileAgeMs, modifiedAfterMs)
     }
 }
 
 /** The stream behind [[DatastreamFileSource]]: `FileStreamSource`'s
   * offset and log contract over a driver-side listing. */
 private[graft] class DatastreamFileStream(spark: SparkSession, glob: String,
-    metadataPath: String, maxFileAgeMs: Long)
+    metadataPath: String, maxFileAgeMs: Long, modifiedAfterMs: Option[Long] = None)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -151,10 +164,12 @@ private[graft] class DatastreamFileStream(spark: SparkSession, glob: String,
   override def prepareForTriggerAvailableNow(): Unit =
     pinned = Some(DatastreamFileSource.listGlob(fs, pattern))
 
-  /** New files (not seen, not older than `maxFileAge` behind the newest
-    * seen) become the next log batch, oldest first. */
+  /** New non-empty files (after the `modifiedAfter` cutoff, not seen,
+    * not older than `maxFileAge` behind the newest seen) become the
+    * next log batch, oldest first. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val fresh = pinned.getOrElse(DatastreamFileSource.listGlob(fs, pattern))
+      .filter(s => s.getLen > 0 && modifiedAfterMs.forall(s.getModificationTime > _))
       .sortBy(_.getModificationTime)
       .map(s => (SparkPath.fromFileStatus(s), s.getModificationTime, s.getLen))
       .filter { case (p, ts, _) => seen.isNewFile(p, ts) }
@@ -177,9 +192,10 @@ private[graft] class DatastreamFileStream(spark: SparkSession, glob: String,
     throw new UnsupportedOperationException(
       "admission-control latestOffset(start, limit) is the entry point")
 
-  /** The batches' files, largest first, packed into tasks by Spark's
-    * file-scan rule. A batch logged before this stream started (a
-    * restart) has its lengths read from the file system. */
+  /** The batches' non-empty files, largest first, packed into tasks by
+    * Spark's file-scan rule. A batch logged before this stream started
+    * (a restart) has its lengths read from the file system; a log that
+    * Spark's `binaryFile` source wrote holds zero-length files too. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[FileStreamSourceOffset].logOffset
     val e = end.asInstanceOf[FileStreamSourceOffset].logOffset
@@ -193,7 +209,7 @@ private[graft] class DatastreamFileStream(spark: SparkSession, glob: String,
         PartitionedFile(InternalRow.empty, path, 0L, len,
           modificationTime = f.timestamp, fileSize = len)
       }
-    }
+    }.filter(_.length > 0)
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     val maxSplit = FilePartition.maxSplitBytes(spark, files.map(_.length + openCost).sum)
     FilePartition.getFilePartitions(spark, files.sortBy(-_.length), maxSplit).toArray

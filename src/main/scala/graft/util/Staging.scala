@@ -49,10 +49,7 @@ object Staging {
         new String(java.nio.file.Files.readAllBytes(ok.toPath)) ==
           fingerprint
       if (!fresh) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(dir)
+        Fs.deleteRecursively(dir.toPath)
         dir.mkdirs()
         build(dir)
         java.nio.file.Files.write(ok.toPath, fingerprint.getBytes)

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
@@ -9,7 +10,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.streaming.runtime.FileStreamSourceLog
+import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset}
+import org.apache.spark.sql.execution.streaming.runtime.FileStreamSource.FileEntry
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,9 +58,9 @@ class DatastreamFileSourceSpec extends AnyFunSuite {
   }
 
   /** Drives the stream the way micro-batch execution does. */
-  private class Driver(root: Path, meta: Path) {
+  private class Driver(root: Path, meta: Path, modifiedAfterMs: Option[Long] = None) {
     val stream = new DatastreamFileStream(spark, glob(root), meta.toString,
-      7L * 24 * 3600 * 1000)
+      7L * 24 * 3600 * 1000, modifiedAfterMs)
     private var at: Offset = stream.initialOffset()
     /** One trigger: the names newly planned. */
     def trigger(): Seq[String] = {
@@ -127,6 +129,44 @@ class DatastreamFileSourceSpec extends AnyFunSuite {
     assert(d.trigger().isEmpty)
     assert(d.trigger().isEmpty)
     d.stream.stop()
+  }
+
+  test("a file at or before the modifiedAfter cutoff and a zero-length " +
+      "file are never planned") {
+    val root = tempDir("dfs-bounds")
+    val cutoff = System.currentTimeMillis() - 3L * 86400 * 1000
+    put(root, "T", "2026/10/19/10/00", "old.avro")
+    put(root, "T", "2026/10/19/10/00", "edge.avro")
+    put(root, "T", "2026/10/19/10/00", "new.avro")
+    val folder = root.resolve("T").resolve("2026/10/19/10/00")
+    Files.setLastModifiedTime(folder.resolve("old.avro"),
+      FileTime.fromMillis(cutoff - 86400 * 1000))
+    Files.setLastModifiedTime(folder.resolve("edge.avro"), FileTime.fromMillis(cutoff))
+    Files.write(folder.resolve("empty.avro"), Array.emptyByteArray)
+    val meta = tempDir("dfs-bounds-meta")
+    val d = new Driver(root, meta, Some(cutoff))
+    assert(d.trigger() == Seq("new.avro"))
+    val log = new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark, meta.toString)
+    assert(log.get(None, None).toSeq.flatMap(_._2).map(e => name(e.path)) ==
+      Seq("new.avro"), "a dropped file is not logged either")
+    // an in-flight blob that gains its content is planned then
+    Files.write(folder.resolve("empty.avro"), "late content".getBytes)
+    assert(d.trigger() == Seq("empty.avro"))
+    assert(d.trigger().isEmpty)
+    d.stream.stop()
+    // Spark's binaryFile source logs zero-length files: a restart on
+    // such a log does not plan them
+    Files.write(folder.resolve("blob.avro"), Array.emptyByteArray)
+    val binaryMeta = tempDir("dfs-bounds-binary")
+    new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark, binaryMeta.toString)
+      .add(0L, Array(FileEntry(folder.resolve("blob.avro").toUri.toString, cutoff, 0L)))
+    val restarted = new DatastreamFileStream(spark, glob(root), binaryMeta.toString,
+      7L * 24 * 3600 * 1000)
+    assert(restarted.planInputPartitions(restarted.initialOffset(),
+      FileStreamSourceOffset(0L)).isEmpty)
+    restarted.stop()
+    intercept[IllegalArgumentException](spark.readStream.format(Format)
+      .option("modifiedAfter", "2026-10-19T10:00:00").load(glob(root)))
   }
 
   test("a restart, then late files behind the checkpoint's newest folder: " +

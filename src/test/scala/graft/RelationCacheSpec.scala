@@ -9,11 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.{CdcTable, ConsolidatedStore}
 
 /** The relation memo behind every CdcTable and ConsolidatedStore read
-  * is keyed by session: an entry of a stopped session can never hit
-  * again and pins a dead context's plan. This suite stops its own
+  * (its purge and cap are [[graft.util.SessionMemo]]'s, covered by
+  * `SessionMemoSpec`): what it keys on. This suite stops its own
   * sessions, so it builds them itself instead of sharing a suite-wide
-  * one, and it stops any session left running first, so no live entry
-  * of another suite counts toward the memo's cap. */
+  * one, and it stops any session left running first. */
 class RelationCacheSpec extends AnyFunSuite {
 
   private def session(): SparkSession = {
@@ -29,30 +28,6 @@ class RelationCacheSpec extends AnyFunSuite {
     lit(seq).as("scn"), lit("").as("rs_id"), lit(0L).as("ssn"))
     .as("sort_key")
 
-  test("a read purges the entries of stopped sessions, below the cap too") {
-    val dir = Files.createTempDirectory(Paths.get("target"), "relcache")
-      .toString
-    val first = session()
-    try {
-      import first.implicits._
-      val t = new CdcTable(first, dir, Seq("id"), numBuckets = 2)
-      t.applyBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "val")
-        .select(struct($"id", $"val").as("row"), lit("INSERT").as("op"),
-          struct(lit(1L).as("ts_ms"), lit(1L).as("scn"),
-            lit("").as("rs_id"), lit(0L).as("ssn")).as("sort_key")), 0L)
-      assert(t.state.get.count() == 2)
-      assert(CdcTable.relationCacheSessions.contains(first))
-    } finally first.stop()
-    val second = session()
-    try {
-      assert(second ne first)
-      assert(new CdcTable(second, dir, Seq("id"), numBuckets = 2)
-        .state.get.count() == 2)
-      // one read of one dir set from the one live session: one entry
-      assert(CdcTable.relationCacheSessions == Seq(second))
-    } finally second.stop()
-  }
-
   test("a dir the driver cannot stat is read fresh, not memoized") {
     val spark = session()
     try {
@@ -65,33 +40,10 @@ class RelationCacheSpec extends AnyFunSuite {
       val unstatable = Seq("file:/no/such/bucket-0")
       read(unstatable); read(unstatable)
       assert(reads == 2)
-      assert(!CdcTable.relationCacheSessions.contains(spark))
+      assert(!CdcTable.relations.sessions.contains(spark))
       val dir = Files.createTempDirectory(Paths.get("target"), "relcache-stat")
       read(Seq(dir.toString)); read(Seq(dir.toString))
       assert(reads == 3)
-    } finally spark.stop()
-  }
-
-  test("past the cap a new read is served uncached; a live session's " +
-      "entry is never evicted") {
-    val spark = session()
-    try {
-      var reads = 0
-      def read(p: String): Unit = {
-        CdcTable.cachedRead(spark, Seq(p)) { reads += 1; spark.range(1).toDF() }
-        ()
-      }
-      val root = Files.createTempDirectory(Paths.get("target"), "relcache-cap")
-      val dirs = (0 to CdcTable.RelationCacheMax)
-        .map(i => Files.createDirectory(root.resolve(s"b$i")).toString)
-      dirs.foreach(read)
-      assert(reads == dirs.size)
-      read(dirs.head)
-      assert(reads == dirs.size, "the first entry must still hit")
-      val held = CdcTable.relationCacheSessions.size
-      assert(held == CdcTable.RelationCacheMax)
-      read(dirs.last)
-      assert(reads == dirs.size + 1, "the read past the cap stays uncached")
     } finally spark.stop()
   }
 
@@ -100,7 +52,7 @@ class RelationCacheSpec extends AnyFunSuite {
     val spark = session()
     try {
       import spark.implicits._
-      def entries = CdcTable.relationCacheSessions.count(_ eq spark)
+      def entries = CdcTable.relations.sessions.count(_ eq spark)
       def batch(tables: Seq[String], extra: Boolean, seq: Long) =
         tables.map(t => (t, seq)).toDF("table_name", "id").select($"table_name",
           (if (extra) struct($"id", lit("v").as("val"), lit(7L).as("extra"))
